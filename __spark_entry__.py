@@ -364,9 +364,7 @@ def _q_extract_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         in_dir = os.path.join(root, "in")
         pages.repartition(16).write.parquet(in_dir)
         q = stream_extract(
-            spark, in_dir,
-            os.path.join(root, "out"), os.path.join(root, "ckpt"),
-            parallelism=16,
+            spark, in_dir, os.path.join(root, "out"), os.path.join(root, "ckpt")
         )
         q.awaitTermination(600)
         rows = spark.read.schema(pipeline.PAGE_ROWS_SCHEMA).parquet(
@@ -860,6 +858,28 @@ def _q_edge_filter_funnel(spark, sf_dir):
     )
 
 
+def _fixture_pdf_pages(
+    spark: SparkSession, sf_dir: str, build_pdf: Callable[[int], bytes]
+) -> DataFrame:
+    """A (url, html) pages table with one fixture PDF per document:
+    ``build_pdf(doc_id)``, a closed-form ``kernel.pdfwrite`` builder."""
+    import pandas as pd
+
+    def build(it):
+        for pdf in it:
+            yield pd.DataFrame(
+                {
+                    "url": pdf["url"],
+                    "html": [build_pdf(int(d)) for d in pdf["doc_id"]],
+                }
+            )
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return docs.select(
+        "doc_id", F.expr(spec.SQL_URL).alias("url")
+    ).mapInPandas(build, schema="url string, html binary")
+
+
 def _q_pdf_images(spark, sf_dir):
     """Images relation end-to-end (beyond-parity: the reference defines
     ImageObject, types.go:216-245, but only ever initializes empty Images
@@ -867,31 +887,9 @@ def _q_pdf_images(spark, sf_dir):
     built closed-form in doc_id (kernel/pdfwrite.build_image_pdf), parsed
     by the kernel's Do operator, every header field and placed bbox
     hash-checked against the oracle's independent restatement."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from pdfplumber_golang_spark.kernel.pdfwrite import build_image_pdf
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("html", T.BinaryType()),
-        ]
-    )
-
-    def build(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "html": [build_image_pdf(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    pages = docs.select(
-        "doc_id", F.expr(spec.SQL_URL).alias("url")
-    ).mapInPandas(build, schema=schema)
+    pages = _fixture_pdf_pages(spark, sf_dir, build_image_pdf)
     return pipeline.extract_images(pages).select(
         "url",
         F.col("img_idx").cast("long").alias("img_idx"),
@@ -934,31 +932,9 @@ def _q_pdf_annots(spark, sf_dir):
     AnnotationObject, types.go:247-276, is never populated there): per-doc
     fixture PDFs with 1+doc_id%2 Link annots (/A→/URI) plus one Text
     annot (/Contents), all fields closed-form in doc_id."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from pdfplumber_golang_spark.kernel.pdfwrite import build_annot_pdf
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("html", T.BinaryType()),
-        ]
-    )
-
-    def build(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "html": [build_annot_pdf(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    pages = docs.select(
-        "doc_id", F.expr(spec.SQL_URL).alias("url")
-    ).mapInPandas(build, schema=schema)
+    pages = _fixture_pdf_pages(spark, sf_dir, build_annot_pdf)
     return pipeline.extract_annotations(pages).select(
         "url",
         F.col("annot_idx").cast("long").alias("annot_idx"),
@@ -1002,31 +978,9 @@ def _q_pdf_forms(spark, sf_dir):
     reference): the visible text lives inside a Form XObject with its own
     /Resources/Font, placed twice by page-level cm translations — the
     extracted text must read the form's line twice in top-down order."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from pdfplumber_golang_spark.kernel.pdfwrite import build_form_pdf
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("html", T.BinaryType()),
-        ]
-    )
-
-    def build(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "html": [build_form_pdf(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    pages = docs.select(
-        "doc_id", F.expr(spec.SQL_URL).alias("url")
-    ).mapInPandas(build, schema=schema)
+    pages = _fixture_pdf_pages(spark, sf_dir, build_form_pdf)
     return pipeline.doc_text(pipeline.extract_pages(pages)).select(
         "url", "text"
     )

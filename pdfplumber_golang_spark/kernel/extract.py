@@ -22,7 +22,7 @@ from .pdfparse import PDFDocument, PDFError, Stream
 class PageResult:
     __slots__ = (
         "page_no", "kind", "text", "n_chars", "n_words", "n_edges",
-        "n_rects", "width", "height", "chars", "edges", "rects",
+        "n_rects", "width", "height",
     )
 
     def __init__(self, **kw):
@@ -170,9 +170,6 @@ def extract_document(url: str, raw: bytes) -> tuple[list[PageResult], str | None
                         n_rects=len(interp.rects),
                         width=mediabox[2] - mediabox[0],
                         height=mediabox[3] - mediabox[1],
-                        chars=interp.chars,
-                        edges=interp.edges,
-                        rects=interp.rects,
                     )
                 )
             if not pages:
@@ -191,9 +188,6 @@ def extract_document(url: str, raw: bytes) -> tuple[list[PageResult], str | None
                 n_rects=0,
                 width=0.0,
                 height=0.0,
-                chars=[],
-                edges=[],
-                rects=[],
             )
         ], None
     except PDFError as e:

@@ -1,28 +1,43 @@
-"""The extraction pipeline: pages table → per-page rows → per-doc text.
+"""The extraction pipeline: pages table → per-doc relations → per-doc text.
 
 Spark-first design (SURVEY §3.2 "Spark shape"):
   * one ``mapInPandas`` stage runs the whole per-document kernel
     (bytes → chars → layout → text) — no cross-node boundary inside a doc;
+  * all eight relations (pages, chars, images, annotations, table cells,
+    curves, edges, metadata) run through one per-document driver,
+    ``_per_doc``: a relation is an emitter generator ``(url, raw) → row
+    tuples`` plus its schema, and the driver builds each batch with one
+    ``pd.DataFrame`` call;
+  * one failure policy, in the driver: a doc whose emitter raises
+    contributes no rows. The pages relation still reports failures as an
+    ``error`` row, because ``extract_document`` returns the error as a
+    value that the pages emitter yields as data. The seven other relations
+    are PDF-only: HTML and other non-PDF payloads give them no rows;
   * explicit column pruning before the UDF (a pandas UDF is opaque to
     Catalyst, so we select only (url, html) ourselves);
-  * skew: repartition by ``xxhash64(url)`` with an extra salt bucket for
-    mega-payloads (``length(html) > threshold``) so one hot partition can't
-    stall the stage (north_rule skew requirement) — docs are atomic units so
-    salting spreads *documents*, pages explode afterwards;
+  * skew (``extract_pages``): optionally repartition by ``xxhash64(url)``
+    with an extra salt bucket for mega-payloads (``length(html) >
+    threshold``) so one hot partition can't stall the stage (north_rule
+    skew requirement) — docs are atomic units so salting spreads
+    *documents*, pages explode afterwards;
   * per-doc text reassembly is a groupBy over (url), shuffle keyed the same
     way as the repartition so AQE can coalesce.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .kernel.extract import extract_document
+from .kernel.extract import extract_document, load_annotations, parse_pdf_objects
+from .kernel.pdfparse import PDFDocument
+from .kernel.tables import extract_tables as kernel_tables
+from .kernel.tables import rects_to_edges
 
 PAGE_ROWS_SCHEMA = T.StructType(
     [
@@ -98,239 +113,6 @@ TABLE_ROWS_SCHEMA = T.StructType(
     ]
 )
 
-#: payloads above this byte size get their own salt buckets (mega-docs)
-MEGA_BYTES = 64 * 1024
-N_SALT = 8
-
-
-def _extract_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        rows: dict[str, list] = {f.name: [] for f in PAGE_ROWS_SCHEMA.fields}
-        for url, raw in zip(pdf["url"], pdf["html"]):
-            pages, err = extract_document(url, bytes(raw))
-            if err is not None:
-                rows["url"].append(url)
-                rows["page_no"].append(0)
-                rows["kind"].append("error")
-                rows["text"].append(None)
-                rows["n_chars"].append(0)
-                rows["n_words"].append(0)
-                rows["n_edges"].append(0)
-                rows["n_rects"].append(0)
-                rows["error"].append(err)
-                continue
-            for p in pages:
-                rows["url"].append(url)
-                rows["page_no"].append(p.page_no)
-                rows["kind"].append(p.kind)
-                rows["text"].append(p.text)
-                rows["n_chars"].append(p.n_chars)
-                rows["n_words"].append(p.n_words)
-                rows["n_edges"].append(p.n_edges)
-                rows["n_rects"].append(p.n_rects)
-                rows["error"].append(None)
-        yield pd.DataFrame(rows)
-
-
-def _char_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in CHAR_ROWS_SCHEMA.fields]
-    for pdf in it:
-        out: dict[str, list] = {c: [] for c in cols}
-        for url, raw in zip(pdf["url"], pdf["html"]):
-            pages, err = extract_document(url, bytes(raw))
-            if err is not None:
-                continue
-            for p in pages:
-                for i, ch in enumerate(p.chars):
-                    t, font, size, x0, y0, x1, y1, w, h = ch
-                    out["url"].append(url)
-                    out["page_no"].append(p.page_no)
-                    out["char_idx"].append(i)
-                    out["text"].append(t)
-                    out["font"].append(font)
-                    out["font_size"].append(size)
-                    out["x0"].append(x0)
-                    out["y0"].append(y0)
-                    out["x1"].append(x1)
-                    out["y1"].append(y1)
-                    out["width"].append(w)
-                    out["height"].append(h)
-        yield pd.DataFrame(out)
-
-
-def _salted(
-    pages: DataFrame,
-    parallelism: int,
-    salt: bool,
-    mega_bytes: int = MEGA_BYTES,
-) -> DataFrame:
-    """Prune to (url, html); optionally spread docs by url-hash + mega salt.
-
-    Shuffling raw payload bytes is expensive (measured: the repartition of
-    a ~6GB payload column made the extract stage I/O-bound and killed
-    scaling, 0.32 efficiency at 8→32 cores). Default is scan-aligned
-    extraction — the parquet/Iceberg reader already splits input by
-    ``spark.sql.files.maxPartitionBytes``, so partitions are balanced
-    without moving bytes. Use salt=True only when the SOURCE layout is
-    skewed (few giant files / hot key ranges); then the explicit url-hash +
-    mega-doc salt repartition is the remedy the north_rule names."""
-    pruned = pages.select("url", "html")
-    if not salt:
-        return pruned
-    salt_col = F.when(
-        F.length("html") > mega_bytes,
-        F.pmod(F.xxhash64("url", F.lit(1)), F.lit(N_SALT)),
-    ).otherwise(F.lit(0))
-    return pruned.repartition(parallelism, F.xxhash64("url"), salt_col)
-
-
-def extract_pages(
-    pages: DataFrame,
-    parallelism: int = 32,
-    salt: bool = False,
-    mega_bytes: int = MEGA_BYTES,
-) -> DataFrame:
-    """pages table → per-page extraction rows (the core stage)."""
-    return _salted(pages, parallelism, salt, mega_bytes).mapInPandas(
-        _extract_batches, schema=PAGE_ROWS_SCHEMA
-    )
-
-
-def extract_chars(
-    pages: DataFrame, parallelism: int = 32, salt: bool = False
-) -> DataFrame:
-    """pages table → flat chars relation (SURVEY §1.1: the central relation)."""
-    return _salted(pages, parallelism, salt).mapInPandas(
-        _char_batches, schema=CHAR_ROWS_SCHEMA
-    )
-
-
-def _image_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .kernel.extract import parse_pdf_objects
-
-    cols = [f.name for f in IMAGE_ROWS_SCHEMA.fields]
-    for pdf in it:
-        out: dict[str, list] = {c: [] for c in cols}
-        for url, raw in zip(pdf["url"], pdf["html"]):
-            try:
-                for page_no, _mb, interp in parse_pdf_objects(bytes(raw)):
-                    for i, im in enumerate(interp.images):
-                        name, w, h, cs, bpc, x0, y0, x1, y1 = im
-                        out["url"].append(url)
-                        out["page_no"].append(page_no)
-                        out["img_idx"].append(i)
-                        out["name"].append(name)
-                        out["width"].append(w)
-                        out["height"].append(h)
-                        out["colorspace"].append(cs)
-                        out["bpc"].append(bpc)
-                        out["x0"].append(x0)
-                        out["y0"].append(y0)
-                        out["x1"].append(x1)
-                        out["y1"].append(y1)
-            except Exception:
-                continue  # error routing parity: bad docs emit no rows
-        yield pd.DataFrame(out)
-
-
-def extract_images(
-    pages: DataFrame, parallelism: int = 32, salt: bool = False
-) -> DataFrame:
-    """pages table → images relation (image-XObject metadata + placed
-    bbox per Do; the reference's ImageObject schema slot made real)."""
-    return _salted(pages, parallelism, salt).mapInPandas(
-        _image_batches, schema=IMAGE_ROWS_SCHEMA
-    )
-
-
-def _annot_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .kernel.extract import load_annotations
-    from .kernel.pdfparse import PDFDocument
-
-    cols = [f.name for f in ANNOT_ROWS_SCHEMA.fields]
-    for pdf in it:
-        out: dict[str, list] = {c: [] for c in cols}
-        for url, raw in zip(pdf["url"], pdf["html"]):
-            try:
-                doc = PDFDocument(bytes(raw))
-                for page in doc.pages:
-                    for i, (sub, x0, y0, x1, y1, txt, lurl) in enumerate(
-                        load_annotations(doc, page)
-                    ):
-                        out["url"].append(url)
-                        out["page_no"].append(page.number)
-                        out["annot_idx"].append(i)
-                        out["subtype"].append(sub)
-                        out["x0"].append(x0)
-                        out["y0"].append(y0)
-                        out["x1"].append(x1)
-                        out["y1"].append(y1)
-                        out["contents"].append(txt)
-                        out["link_url"].append(lurl)
-            except Exception:
-                continue  # error routing parity: bad docs emit no rows
-        yield pd.DataFrame(out)
-
-
-def extract_annotations(
-    pages: DataFrame, parallelism: int = 32, salt: bool = False
-) -> DataFrame:
-    """pages table → annotations relation (/Annots subtype, rect,
-    contents, link URI — the reference's AnnotationObject slot made real)."""
-    return _salted(pages, parallelism, salt).mapInPandas(
-        _annot_batches, schema=ANNOT_ROWS_SCHEMA
-    )
-
-
-def _table_batches(
-    it: Iterator[pd.DataFrame], **table_opts
-) -> Iterator[pd.DataFrame]:
-    from .kernel.extract import parse_pdf_objects
-    from .kernel.tables import extract_tables as kernel_tables
-
-    cols = [f.name for f in TABLE_ROWS_SCHEMA.fields]
-    for pdf in it:
-        out: dict[str, list] = {c: [] for c in cols}
-        for url, raw in zip(pdf["url"], pdf["html"]):
-            raw = bytes(raw)
-            if raw[:5] != b"%PDF-":
-                continue
-            try:
-                for page_no, _mb, interp in parse_pdf_objects(raw):
-                    tabs = kernel_tables(
-                        interp.chars, interp.edges, interp.rects, **table_opts
-                    )
-                    for tno, tab in enumerate(tabs):
-                        for rno, row in enumerate(tab["rows"]):
-                            for cno, cell in enumerate(row):
-                                out["url"].append(url)
-                                out["page_no"].append(page_no)
-                                out["table_no"].append(tno)
-                                out["row_no"].append(rno)
-                                out["col_no"].append(cno)
-                                out["cell_text"].append(cell)
-            except Exception:
-                continue  # malformed: no table rows
-        yield pd.DataFrame(out)
-
-
-def extract_tables_df(
-    pages: DataFrame, parallelism: int = 32, salt: bool = False, **table_opts
-) -> DataFrame:
-    """pages table → flattened table cells (SURVEY §2.7). ``table_opts``
-    are the kernel extract_tables options (vertical_strategy=,
-    horizontal_strategy=, min_table_size=, text_tolerance=,
-    snap_tolerance=, join_tolerance=) — plan-build-time constants closed
-    over by the Arrow stage, exactly like the reference's functional
-    options (types.go:366-393)."""
-    import functools
-
-    fn = functools.partial(_table_batches, **table_opts)
-    return _salted(pages, parallelism, salt).mapInPandas(
-        fn, schema=TABLE_ROWS_SCHEMA
-    )
-
-
 CURVE_ROWS_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
@@ -343,47 +125,6 @@ CURVE_ROWS_SCHEMA = T.StructType(
         T.StructField("y1", T.DoubleType()),
     ]
 )
-
-
-def _curve_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .kernel.extract import parse_pdf_objects
-
-    cols = [f.name for f in CURVE_ROWS_SCHEMA.fields]
-    for pdf in it:
-        out: dict[str, list] = {c: [] for c in cols}
-        for url, raw in zip(pdf["url"], pdf["html"]):
-            raw = bytes(raw)
-            if raw[:5] != b"%PDF-":
-                continue
-            try:
-                for page_no, _mb, interp in parse_pdf_objects(raw):
-                    for cno, (pts,) in enumerate(interp.curves):
-                        xs = [p[0] for p in pts]
-                        ys = [p[1] for p in pts]
-                        out["url"].append(url)
-                        out["page_no"].append(page_no)
-                        out["curve_no"].append(cno)
-                        out["n_points"].append(len(pts))
-                        out["x0"].append(min(xs))
-                        out["y0"].append(min(ys))
-                        out["x1"].append(max(xs))
-                        out["y1"].append(max(ys))
-            except Exception:
-                continue
-        yield pd.DataFrame(out)
-
-
-def extract_curves(
-    pages: DataFrame, parallelism: int = 32, salt: bool = False
-) -> DataFrame:
-    """pages table → curves relation (url, page_no, curve_no, n_points,
-    bbox). CurveObjects are non-axis stroked point chains and non-rect
-    fills (kernel/content.py _emit_stroke/_emit_fill; reference populates
-    them at content_stream_parser.go:1259-1357)."""
-    return _salted(pages, parallelism, salt).mapInPandas(
-        _curve_batches, schema=CURVE_ROWS_SCHEMA
-    )
-
 
 EDGE_ROWS_SCHEMA = T.StructType(
     [
@@ -398,50 +139,6 @@ EDGE_ROWS_SCHEMA = T.StructType(
     ]
 )
 
-
-def _edge_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .kernel.extract import parse_pdf_objects
-    from .kernel.tables import rects_to_edges
-
-    cols = [f.name for f in EDGE_ROWS_SCHEMA.fields]
-    for pdf in it:
-        out: dict[str, list] = {c: [] for c in cols}
-
-        def emit(url, page_no, e, src):
-            out["url"].append(url)
-            out["page_no"].append(page_no)
-            out["x0"].append(e[0])
-            out["y0"].append(e[1])
-            out["x1"].append(e[2])
-            out["y1"].append(e[3])
-            out["width"].append(e[4] if len(e) > 4 else 1.0)
-            out["src"].append(src)
-
-        for url, raw in zip(pdf["url"], pdf["html"]):
-            raw = bytes(raw)
-            if raw[:5] != b"%PDF-":
-                continue
-            try:
-                for page_no, _mb, interp in parse_pdf_objects(raw):
-                    for e in interp.edges:
-                        emit(url, page_no, e, "line")
-                    rh, rv = rects_to_edges(interp.rects)
-                    for e in rh + rv:
-                        emit(url, page_no, e, "rect_edge")
-            except Exception:
-                continue
-        yield pd.DataFrame(out)
-
-
-def extract_edges(
-    pages: DataFrame, parallelism: int = 32, salt: bool = False
-) -> DataFrame:
-    """pages table → flat edges relation (lines + rect-expanded edges, T3)."""
-    return _salted(pages, parallelism, salt).mapInPandas(
-        _edge_batches, schema=EDGE_ROWS_SCHEMA
-    )
-
-
 METADATA_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
@@ -451,34 +148,183 @@ METADATA_SCHEMA = T.StructType(
     ]
 )
 
+#: payloads above this byte size get their own salt buckets (mega-docs)
+MEGA_BYTES = 64 * 1024
+N_SALT = 8
 
-def _metadata_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .kernel.pdfparse import PDFDocument
-
-    for pdf in it:
-        out: dict[str, list] = {"url": [], "title": [], "author": [], "producer": []}
-        for url, raw in zip(pdf["url"], pdf["html"]):
-            raw = bytes(raw)
-            if raw[:5] != b"%PDF-":
-                continue
-            try:
-                meta = PDFDocument(raw).metadata()
-            except Exception:
-                continue
-            out["url"].append(url)
-            out["title"].append(meta.get("Title"))
-            out["author"].append(meta.get("Author"))
-            out["producer"].append(meta.get("Producer"))
-        yield pd.DataFrame(out)
+#: a relation's per-document kernel: (url, raw payload) → row tuples in
+#: schema order
+Emitter = Callable[[str, bytes], Iterable[tuple]]
 
 
-def extract_metadata_df(
-    pages: DataFrame, parallelism: int = 32, salt: bool = False
-) -> DataFrame:
-    """pages table → PDF /Info metadata rows (Title/Author/Producer)."""
-    return _salted(pages, parallelism, salt).mapInPandas(
-        _metadata_batches, schema=METADATA_SCHEMA
+def _per_doc(
+    emit: Emitter, schema: T.StructType
+) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """The ``mapInPandas`` function that runs ``emit`` once per doc.
+
+    A doc whose emitter raises contributes no rows: its rows are collected
+    in full before any is kept, so a failure on page 3 cannot leave pages 1
+    and 2 behind. A non-PDF payload fails the PDF-only emitters at
+    ``PDFDocument``'s header check, so it gives them no rows."""
+    cols = schema.fieldNames()
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows: list[tuple] = []
+            for url, raw in zip(pdf["url"], pdf["html"]):
+                try:
+                    doc_rows = list(emit(url, bytes(raw)))
+                except Exception:  # malformed inputs must never kill the executor
+                    continue
+                rows.extend(doc_rows)
+            yield pd.DataFrame(rows, columns=cols)
+
+    return batches
+
+
+def _relation(pages: DataFrame, emit: Emitter, schema: T.StructType) -> DataFrame:
+    """pages table → one relation: (url, html) pruned, then the driver."""
+    return pages.select("url", "html").mapInPandas(
+        _per_doc(emit, schema), schema=schema
     )
+
+
+def _page_rows(url: str, raw: bytes) -> Iterator[tuple]:
+    pages, err = extract_document(url, raw)
+    if err is not None:
+        yield (url, 0, "error", None, 0, 0, 0, 0, err)
+    for p in pages:
+        yield (
+            url, p.page_no, p.kind, p.text,
+            p.n_chars, p.n_words, p.n_edges, p.n_rects, None,
+        )
+
+
+def extract_pages(
+    pages: DataFrame,
+    parallelism: int = 32,
+    salt: bool = False,
+    mega_bytes: int = MEGA_BYTES,
+) -> DataFrame:
+    """pages table → per-page extraction rows (the core stage); a doc that
+    fails to extract gives one ``kind="error"`` row carrying the error.
+
+    Shuffling raw payload bytes is expensive (measured: the repartition of
+    a ~6GB payload column made the extract stage I/O-bound and killed
+    scaling, 0.32 efficiency at 8→32 cores). Default is scan-aligned
+    extraction — the parquet/Iceberg reader already splits input by
+    ``spark.sql.files.maxPartitionBytes``, so partitions are balanced
+    without moving bytes. Use salt=True only when the SOURCE layout is
+    skewed (few giant files / hot key ranges); then the explicit url-hash +
+    mega-doc salt repartition over ``parallelism`` partitions is the remedy
+    the north_rule names."""
+    if salt:
+        salt_col = F.when(
+            F.length("html") > mega_bytes,
+            F.pmod(F.xxhash64("url", F.lit(1)), F.lit(N_SALT)),
+        ).otherwise(F.lit(0))
+        pages = pages.select("url", "html").repartition(
+            parallelism, F.xxhash64("url"), salt_col
+        )
+    return _relation(pages, _page_rows, PAGE_ROWS_SCHEMA)
+
+
+def _char_rows(url: str, raw: bytes) -> Iterator[tuple]:
+    for page_no, _mb, interp in parse_pdf_objects(raw):
+        for i, ch in enumerate(interp.chars):
+            yield (url, page_no, i, *ch)
+
+
+def extract_chars(pages: DataFrame) -> DataFrame:
+    """pages table → flat chars relation (SURVEY §1.1: the central relation)."""
+    return _relation(pages, _char_rows, CHAR_ROWS_SCHEMA)
+
+
+def _image_rows(url: str, raw: bytes) -> Iterator[tuple]:
+    for page_no, _mb, interp in parse_pdf_objects(raw):
+        for i, im in enumerate(interp.images):
+            yield (url, page_no, i, *im)
+
+
+def extract_images(pages: DataFrame) -> DataFrame:
+    """pages table → images relation (image-XObject metadata + placed
+    bbox per Do; the reference's ImageObject schema slot made real)."""
+    return _relation(pages, _image_rows, IMAGE_ROWS_SCHEMA)
+
+
+def _annot_rows(url: str, raw: bytes) -> Iterator[tuple]:
+    doc = PDFDocument(raw)
+    for page in doc.pages:
+        for i, annot in enumerate(load_annotations(doc, page)):
+            yield (url, page.number, i, *annot)
+
+
+def extract_annotations(pages: DataFrame) -> DataFrame:
+    """pages table → annotations relation (/Annots subtype, rect,
+    contents, link URI — the reference's AnnotationObject slot made real)."""
+    return _relation(pages, _annot_rows, ANNOT_ROWS_SCHEMA)
+
+
+def _table_rows(url: str, raw: bytes, **table_opts) -> Iterator[tuple]:
+    for page_no, _mb, interp in parse_pdf_objects(raw):
+        tabs = kernel_tables(
+            interp.chars, interp.edges, interp.rects, **table_opts
+        )
+        for tno, tab in enumerate(tabs):
+            for rno, row in enumerate(tab["rows"]):
+                for cno, cell in enumerate(row):
+                    yield (url, page_no, tno, rno, cno, cell)
+
+
+def extract_tables_df(pages: DataFrame, **table_opts) -> DataFrame:
+    """pages table → flattened table cells (SURVEY §2.7). ``table_opts``
+    are the kernel extract_tables options (vertical_strategy=,
+    horizontal_strategy=, min_table_size=, text_tolerance=,
+    snap_tolerance=, join_tolerance=) — plan-build-time constants closed
+    over by the Arrow stage, exactly like the reference's functional
+    options (types.go:366-393)."""
+    emit = functools.partial(_table_rows, **table_opts)
+    return _relation(pages, emit, TABLE_ROWS_SCHEMA)
+
+
+def _curve_rows(url: str, raw: bytes) -> Iterator[tuple]:
+    for page_no, _mb, interp in parse_pdf_objects(raw):
+        for cno, (pts,) in enumerate(interp.curves):
+            xs = [p[0] for p in pts]
+            ys = [p[1] for p in pts]
+            yield (url, page_no, cno, len(pts), min(xs), min(ys), max(xs), max(ys))
+
+
+def extract_curves(pages: DataFrame) -> DataFrame:
+    """pages table → curves relation (url, page_no, curve_no, n_points,
+    bbox). CurveObjects are non-axis stroked point chains and non-rect
+    fills (kernel/content.py _emit_stroke/_emit_fill; reference populates
+    them at content_stream_parser.go:1259-1357)."""
+    return _relation(pages, _curve_rows, CURVE_ROWS_SCHEMA)
+
+
+def _edge_rows(url: str, raw: bytes) -> Iterator[tuple]:
+    for page_no, _mb, interp in parse_pdf_objects(raw):
+        rh, rv = rects_to_edges(interp.rects)
+        for src, edges in (("line", interp.edges), ("rect_edge", rh + rv)):
+            for e in edges:
+                width = e[4] if len(e) > 4 else 1.0
+                yield (url, page_no, e[0], e[1], e[2], e[3], width, src)
+
+
+def extract_edges(pages: DataFrame) -> DataFrame:
+    """pages table → flat edges relation (lines + rect-expanded edges, T3)."""
+    return _relation(pages, _edge_rows, EDGE_ROWS_SCHEMA)
+
+
+def _metadata_rows(url: str, raw: bytes) -> Iterator[tuple]:
+    meta = PDFDocument(raw).metadata()
+    yield (url, meta.get("Title"), meta.get("Author"), meta.get("Producer"))
+
+
+def extract_metadata_df(pages: DataFrame) -> DataFrame:
+    """pages table → PDF /Info metadata rows (Title/Author/Producer)."""
+    return _relation(pages, _metadata_rows, METADATA_SCHEMA)
 
 
 def doc_text(page_rows: DataFrame) -> DataFrame:

@@ -40,6 +40,22 @@ def package_zip() -> str:
     return path
 
 
+def _default_driver_mem() -> str:
+    """Half the memory this process may use: the smaller of physical RAM
+    and the cgroup v2 ``memory.max`` limit, when one is set. The driver JVM
+    shares the machine with Python workers and in-process oracles, so a
+    fixed heap larger than the machine gets the JVM OOM-killed."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            cgroup = f.read().strip()
+    except OSError:
+        cgroup = "max"
+    if cgroup != "max":
+        limit = min(limit, int(cgroup))
+    return f"{limit // 2 // 2**20}m"
+
+
 def get_spark(
     app: str = "pdfplumber_golang_spark",
     cores: int | None = None,
@@ -62,7 +78,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Dio.netty.tryReflectionSetAccessible=true")
     )

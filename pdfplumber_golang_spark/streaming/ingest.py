@@ -25,7 +25,6 @@ def stream_extract(
     in_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    parallelism: int = 8,
 ) -> StreamingQuery:
     """Stream parquet page files from in_dir, extract, sink to parquet.
 
@@ -37,9 +36,7 @@ def stream_extract(
         .option("maxFilesPerTrigger", 8)
         .parquet(in_dir)
     )
-    rows = pages.select("url", "html").mapInPandas(
-        pipeline._extract_batches, schema=pipeline.PAGE_ROWS_SCHEMA
-    )
+    rows = pipeline.extract_pages(pages)
     return (
         rows.writeStream.format("parquet")
         .option("path", out_dir)

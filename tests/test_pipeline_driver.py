@@ -1,0 +1,99 @@
+"""The per-document driver of ``pipeline`` over plain pandas batches.
+
+No JVM: each relation's emitter runs through ``pipeline._per_doc`` exactly
+as ``mapInPandas`` would call it, and the batches it yields are checked
+against the relation's schema with the Arrow conversion Spark applies."""
+
+import pandas as pd
+import pyarrow as pa
+import pytest
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from pdfplumber_golang_spark import pipeline
+from pdfplumber_golang_spark.kernel.pdfwrite import (
+    build_annot_pdf,
+    build_image_pdf,
+    build_pdf,
+)
+
+TEXT = "Dummy PDF file"
+HTML = b"<html><body><p>Some page text here</p></body></html>"
+JUNK = b"%PDF-1.4\n\x00junk"  # PDF header, then nothing parseable
+
+
+def _pdf(variant: str) -> bytes:
+    return build_pdf(3, TEXT, variant)[0]
+
+
+# relation -> (emitter, schema, a PDF fixture that yields rows)
+RELATIONS = {
+    "pages": (pipeline._page_rows, pipeline.PAGE_ROWS_SCHEMA, _pdf("pdf_plain")),
+    "chars": (pipeline._char_rows, pipeline.CHAR_ROWS_SCHEMA, _pdf("pdf_plain")),
+    "images": (pipeline._image_rows, pipeline.IMAGE_ROWS_SCHEMA, build_image_pdf(3)),
+    "annots": (pipeline._annot_rows, pipeline.ANNOT_ROWS_SCHEMA, build_annot_pdf(3)),
+    "tables": (pipeline._table_rows, pipeline.TABLE_ROWS_SCHEMA, _pdf("pdf_graphics")),
+    "curves": (pipeline._curve_rows, pipeline.CURVE_ROWS_SCHEMA, _pdf("pdf_curves")),
+    "edges": (pipeline._edge_rows, pipeline.EDGE_ROWS_SCHEMA, _pdf("pdf_graphics")),
+    "metadata": (pipeline._metadata_rows, pipeline.METADATA_SCHEMA, _pdf("pdf_plain")),
+}
+
+
+def _drive(emit, schema, batch) -> pd.DataFrame:
+    out = list(pipeline._per_doc(emit, schema)(iter([batch])))
+    assert len(out) == 1
+    frame = out[0]
+    assert list(frame.columns) == schema.fieldNames()
+    pa.Table.from_pandas(frame, schema=to_arrow_schema(schema), preserve_index=False)
+    return frame
+
+
+@pytest.mark.parametrize("relation", sorted(RELATIONS))
+def test_relation_keeps_pdf_rows_and_routes_bad_docs(relation):
+    emit, schema, pdf = RELATIONS[relation]
+    batch = pd.DataFrame(
+        {"url": ["good", "html", "junk"], "html": [pdf, HTML, JUNK]}
+    )
+    frame = _drive(emit, schema, batch)
+    assert (frame["url"] == "good").sum() > 0
+    if relation == "pages":
+        junk = frame[frame["url"] == "junk"]
+        assert list(junk["kind"]) == ["error"] and junk["error"].iloc[0]
+        assert list(frame.loc[frame["url"] == "html", "kind"]) == ["html"]
+    else:
+        assert set(frame["url"]) == {"good"}
+
+
+def test_doc_that_raises_midway_leaves_no_rows():
+    schema = T.StructType([T.StructField("url", T.StringType())])
+
+    def emit(url, raw):
+        yield (url,)
+        if url == "bad":
+            raise ValueError("page 2 is malformed")
+
+    batch = pd.DataFrame({"url": ["a", "bad", "b"], "html": [b"%PDF-"] * 3})
+    assert list(_drive(emit, schema, batch)["url"]) == ["a", "b"]
+
+
+@pytest.mark.parametrize("relation", sorted(RELATIONS))
+def test_all_junk_batch(relation):
+    emit, schema, _pdf_bytes = RELATIONS[relation]
+    batch = pd.DataFrame({"url": ["j1", "j2"], "html": [JUNK, JUNK[:7]]})
+    frame = _drive(emit, schema, batch)
+    if relation == "pages":
+        assert list(frame["kind"]) == ["error", "error"]
+    else:
+        assert frame.empty
+
+
+@pytest.mark.parametrize("relation", sorted(RELATIONS))
+def test_empty_frame_matches_schema(relation):
+    _emit, schema, _pdf_bytes = RELATIONS[relation]
+
+    def emit(url, raw):
+        raise ValueError(url)
+        yield
+
+    batch = pd.DataFrame({"url": ["j1", "j2"], "html": [JUNK, HTML]})
+    assert _drive(emit, schema, batch).empty
