@@ -1087,9 +1087,11 @@ def _q_extract_tables_relational(spark, sf_dir):
     )
 
 
-def _shipped(fn: Callable) -> Callable:
+def _shipped(name: str, fn: Callable) -> Callable:
     def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ensure_shipped(spark)
+        # label every Spark job the query starts with its registry name
+        spark.sparkContext.setJobDescription(name)
         # release the PREVIOUS query's persisted intermediates (its result
         # is materialized by the time the harness builds the next query) —
         # bounds cache accumulation in long-lived drivers (ADVICE r2)
@@ -1103,7 +1105,7 @@ def _shipped(fn: Callable) -> Callable:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        name: _shipped(fn)
+        name: _shipped(name, fn)
         for name, fn in _raw_queries().items()
     }
 

@@ -19,6 +19,8 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import contextlib
+import io
 import json
 import os
 import sys
@@ -76,19 +78,20 @@ def main() -> int:
         if args.explain:
             os.makedirs(os.path.join(REPO, "plans", "r06"), exist_ok=True)
             df = qs[name](spark, SF_DIR)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                df.explain("formatted")
             p = os.path.join(REPO, "plans", "r06", f"{name}_{args.tag}.txt")
             with open(p, "w") as f:
-                f.write(plan)
+                # explain() prints the plan string plus one newline
+                f.write(buf.getvalue().removesuffix("\n"))
             print(f"wrote {p}")
             continue
         secs = []
         for i in range(args.repeats):
-            spark.sparkContext.setJobDescription(f"{name} [{i}]")
             t0 = time.perf_counter()
-            df = qs[name](spark, SF_DIR)
+            df = qs[name](spark, SF_DIR)  # labels its jobs with the name
+            spark.sparkContext.setJobDescription(f"{name} [{i}]")
             if args.count:
                 df.count()
             else:

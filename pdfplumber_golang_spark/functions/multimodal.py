@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import spec
+from ..session import drop_zip_finders
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -807,6 +808,7 @@ def media_features(media: DataFrame) -> DataFrame:
     with the input pruned to exactly the two consumed columns."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in it:
             out = {k: [] for k in ("url", "media_type", "n_bytes", "width", "height")}
             for url, data in zip(pdf["url"], pdf["data"]):
@@ -835,6 +837,7 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in it:
             yield pd.DataFrame(
                 {
@@ -873,6 +876,7 @@ def media_pixel_stats(media: DataFrame) -> DataFrame:
     sum/min/max are exact integers, mean rounds at 4 dp."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in it:
             out = {k: [] for k in PIXEL_SCHEMA.fieldNames()}
             for url, data in zip(pdf["url"], pdf["data"]):
@@ -977,6 +981,7 @@ def render_pdf_pages(spark, sf_dir: str):
     from ..sources.pagesgen import load_or_build_pages
 
     def render(batches):
+        drop_zip_finders()
         from .. import api
 
         for b in batches:
@@ -1028,6 +1033,7 @@ def media_resize(media: DataFrame) -> DataFrame:
     service."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in it:
             out = {k: [] for k in
                    ("url", "thumb_w", "thumb_h", "t_sum", "t_min", "t_max")}
@@ -1129,6 +1135,7 @@ def video_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in it:
             yield pd.DataFrame(
                 {"url": pdf["url"],
@@ -1148,6 +1155,7 @@ def media_frame_sample(video: DataFrame, k: int = FRAME_SAMPLE_K) -> DataFrame:
     shape a real decoder UDF has)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in it:
             out = {kk: [] for kk in ("url", "frame_idx", "width", "height")}
             for url, data in zip(pdf["url"], pdf["data"]):

@@ -8,6 +8,9 @@ Spark-first design (SURVEY §3.2 "Spark shape"):
     ``_per_doc``: a relation is an emitter generator ``(url, raw) → row
     tuples`` plus its schema, and the driver builds each batch with one
     ``pd.DataFrame`` call;
+  * the driver drops the Python worker's cached ``zipimporter`` finders
+    once per task, so the next task's ``importlib.invalidate_caches()``
+    does not re-read all of ``pyspark.zip`` (``session.drop_zip_finders``);
   * one failure policy, in the driver: a doc whose emitter raises
     contributes no rows. The pages relation still reports failures as an
     ``error`` row, because ``extract_document`` returns the error as a
@@ -38,6 +41,7 @@ from .kernel.extract import extract_document, load_annotations, parse_pdf_object
 from .kernel.pdfparse import PDFDocument
 from .kernel.tables import extract_tables as kernel_tables
 from .kernel.tables import rects_to_edges
+from .session import drop_zip_finders
 
 PAGE_ROWS_SCHEMA = T.StructType(
     [
@@ -169,6 +173,7 @@ def _per_doc(
     cols = schema.fieldNames()
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in it:
             rows: list[tuple] = []
             for url, raw in zip(pdf["url"], pdf["html"]):

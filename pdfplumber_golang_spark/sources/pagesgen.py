@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 
 from .. import spec
 from ..kernel.pdfwrite import build_payload
+from ..session import drop_zip_finders
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -43,6 +44,7 @@ _EPOCH = datetime.datetime(2024, 1, 1)
 
 
 def _gen_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    drop_zip_finders()
     for pdf in it:
         urls, tss, payloads, goldens, langs, ids, variants = [], [], [], [], [], [], []
         for doc_id, text, lang in zip(pdf["doc_id"], pdf["text"], pdf["lang"]):
@@ -80,6 +82,7 @@ def _variant_pages(spark: SparkSession, sf_dir: str, variant: str) -> DataFrame:
     from ..kernel.pdfwrite import build_pdf
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in it:
             urls, payloads = [], []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):

@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..session import drop_zip_finders
+
 CRLF = b"\r\n"
 
 WARC_PAGES_SCHEMA = T.StructType(
@@ -121,6 +123,7 @@ def read_warc_pages(spark: SparkSession, warc_dir: str) -> DataFrame:
     files = spark.read.format("binaryFile").load(warc_dir).select("content")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in it:
             urls, tss, payloads = [], [], []
             for blob in pdf["content"]:

@@ -4,6 +4,11 @@ No JVM: each relation's emitter runs through ``pipeline._per_doc`` exactly
 as ``mapInPandas`` would call it, and the batches it yields are checked
 against the relation's schema with the Arrow conversion Spark applies."""
 
+import importlib
+import sys
+import zipfile
+import zipimport
+
 import pandas as pd
 import pyarrow as pa
 import pytest
@@ -11,6 +16,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from pdfplumber_golang_spark import pipeline
+from pdfplumber_golang_spark.session import drop_zip_finders
 from pdfplumber_golang_spark.kernel.pdfwrite import (
     build_annot_pdf,
     build_image_pdf,
@@ -97,3 +103,43 @@ def test_empty_frame_matches_schema(relation):
 
     batch = pd.DataFrame({"url": ["j1", "j2"], "html": [JUNK, HTML]})
     assert _drive(emit, schema, batch).empty
+
+
+def _zip_finders() -> list:
+    return [
+        p for p, f in sys.path_importer_cache.items()
+        if isinstance(f, zipimport.zipimporter)
+    ]
+
+
+@pytest.fixture
+def zip_package(tmp_path):
+    """A two-module package imported from a zip on ``sys.path``, the way a
+    Python worker imports pyspark from ``pyspark.zip``."""
+    archive = tmp_path / "zpkg.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zpkg/__init__.py", "")
+        z.writestr("zpkg/one.py", "X = 1\n")
+        z.writestr("zpkg/two.py", "X = 2\n")
+    saved_path, saved_cache = list(sys.path), dict(sys.path_importer_cache)
+    sys.path.insert(0, str(archive))
+    importlib.import_module("zpkg.one")
+    assert _zip_finders()
+    yield
+    sys.path[:] = saved_path
+    for name in [m for m in sys.modules if m.split(".")[0] == "zpkg"]:
+        del sys.modules[name]
+    sys.path_importer_cache.clear()
+    sys.path_importer_cache.update(saved_cache)
+
+
+def test_drop_zip_finders_keeps_zip_importable(zip_package):
+    drop_zip_finders()
+    assert _zip_finders() == []
+    assert importlib.import_module("zpkg.two").X == 2
+
+
+def test_driver_drops_zip_finders_each_task(zip_package):
+    emit, schema, pdf = RELATIONS["pages"]
+    _drive(emit, schema, pd.DataFrame({"url": ["good"], "html": [pdf]}))
+    assert _zip_finders() == []
