@@ -1090,7 +1090,7 @@ def _q_extract_tables_relational(spark, sf_dir):
 def _shipped(name: str, fn: Callable) -> Callable:
     def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ensure_shipped(spark)
-        # label every Spark job the query starts with its registry name
+        # names the query on its jobs in the Spark UI and event log
         spark.sparkContext.setJobDescription(name)
         # release the PREVIOUS query's persisted intermediates (its result
         # is materialized by the time the harness builds the next query) —
