@@ -24,6 +24,7 @@ from pdfplumber_golang_spark.sources.pagesgen import (
     build_curves_pages,
     build_rowrects_pages,
     build_texttable_pages,
+    fixture_table,
     load_or_build_pages,
 )
 
@@ -858,28 +859,6 @@ def _q_edge_filter_funnel(spark, sf_dir):
     )
 
 
-def _fixture_pdf_pages(
-    spark: SparkSession, sf_dir: str, build_pdf: Callable[[int], bytes]
-) -> DataFrame:
-    """A (url, html) pages table with one fixture PDF per document:
-    ``build_pdf(doc_id)``, a closed-form ``kernel.pdfwrite`` builder."""
-    import pandas as pd
-
-    def build(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "html": [build_pdf(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return docs.select(
-        "doc_id", F.expr(spec.SQL_URL).alias("url")
-    ).mapInPandas(build, schema="url string, html binary")
-
-
 def _q_pdf_images(spark, sf_dir):
     """Images relation end-to-end (beyond-parity: the reference defines
     ImageObject, types.go:216-245, but only ever initializes empty Images
@@ -889,7 +868,7 @@ def _q_pdf_images(spark, sf_dir):
     hash-checked against the oracle's independent restatement."""
     from pdfplumber_golang_spark.kernel.pdfwrite import build_image_pdf
 
-    pages = _fixture_pdf_pages(spark, sf_dir, build_image_pdf)
+    pages = fixture_table(spark, sf_dir, build_image_pdf, "html")
     return pipeline.extract_images(pages).select(
         "url",
         F.col("img_idx").cast("long").alias("img_idx"),
@@ -934,7 +913,7 @@ def _q_pdf_annots(spark, sf_dir):
     annot (/Contents), all fields closed-form in doc_id."""
     from pdfplumber_golang_spark.kernel.pdfwrite import build_annot_pdf
 
-    pages = _fixture_pdf_pages(spark, sf_dir, build_annot_pdf)
+    pages = fixture_table(spark, sf_dir, build_annot_pdf, "html")
     return pipeline.extract_annotations(pages).select(
         "url",
         F.col("annot_idx").cast("long").alias("annot_idx"),
@@ -980,7 +959,7 @@ def _q_pdf_forms(spark, sf_dir):
     extracted text must read the form's line twice in top-down order."""
     from pdfplumber_golang_spark.kernel.pdfwrite import build_form_pdf
 
-    pages = _fixture_pdf_pages(spark, sf_dir, build_form_pdf)
+    pages = fixture_table(spark, sf_dir, build_form_pdf, "html")
     return pipeline.doc_text(pipeline.extract_pages(pages)).select(
         "url", "text"
     )

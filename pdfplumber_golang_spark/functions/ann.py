@@ -87,7 +87,7 @@ def ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ann_bruteforce_oracle() -> str:
     return f"""
-WITH emb AS (
+WITH emb AS MATERIALIZED (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
 scored AS (
@@ -160,7 +160,7 @@ def embedding_cosine_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def embedding_cosine_dups_oracle() -> str:
     return f"""
-WITH emb AS (
+WITH emb AS MATERIALIZED (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
 scored AS (
@@ -336,7 +336,7 @@ def dedup_embedding_lsh_oracle() -> str:
         "2 * (ascii(substr(md5(CAST(j AS STRING) || '_' || CAST(d - 1 AS STRING)), 1, 1)) % 2) - 1"
     )
     return f"""
-WITH emb AS (
+WITH emb AS MATERIALIZED (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
 proj AS (
@@ -403,7 +403,7 @@ def ann_lsh_oracle() -> str:
         "2 * (ascii(substr(md5(CAST(j AS STRING) || '_' || CAST(d - 1 AS STRING)), 1, 1)) % 2) - 1"
     )
     return f"""
-WITH emb AS (
+WITH emb AS MATERIALIZED (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
 sigs AS (
@@ -619,7 +619,7 @@ def ann_ivf_oracle() -> str:
 )"""
 
     return f"""
-WITH emb AS (
+WITH emb AS MATERIALIZED (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
 vecs AS (
@@ -817,7 +817,7 @@ qd{m} AS (
         f"SELECT * FROM qd{m}" for m in range(1, PQ_M + 1)
     )
     return f"""
-WITH emb AS (
+WITH emb AS MATERIALIZED (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
 vecs AS (
@@ -1003,7 +1003,7 @@ def ann_ivfpq_oracle() -> str:
 
     def assign(vtab: str, ctab: str, out: str) -> str:
         return f"""
-{out} AS (
+{out} AS MATERIALIZED (
   SELECT vec_id, cid FROM (
     SELECT v.vec_id, c.cid,
            ROW_NUMBER() OVER (PARTITION BY v.vec_id
@@ -1014,14 +1014,14 @@ def ann_ivfpq_oracle() -> str:
 
     def update(vtab: str, atab: str, prev: str, out: str, dim: int) -> str:
         return f"""
-{out}_sums AS (
+{out}_sums AS MATERIALIZED (
   SELECT a.cid, d,
          CAST(FLOOR(SUM(v.vi[d])::DOUBLE / COUNT(*)) AS BIGINT) AS c
   FROM {atab} a JOIN {vtab} v USING (vec_id),
        (SELECT unnest(generate_series(1, {dim})) AS d)
   GROUP BY a.cid, d
 ),
-{out} AS (
+{out} AS MATERIALIZED (
   SELECT p.cid,
          CASE WHEN COUNT(s.c) = 0 THEN p.ci
               ELSE list(s.c ORDER BY s.d) END AS ci
@@ -1038,14 +1038,14 @@ def ann_ivfpq_oracle() -> str:
         prev = f"cents{it}"
     parts.append("," + assign("vecs", prev, "final_assign"))
     parts.append(f""",
-resid AS (
+resid AS MATERIALIZED (
   SELECT v.vec_id,
          list_transform(generate_series(1, {EMB_DIM}),
                         d -> v.vi[d] - c.ci[d]) AS vi
   FROM vecs v JOIN final_assign f USING (vec_id)
   JOIN {prev} c ON c.cid = f.cid
 ),
-qprobe AS (
+qprobe AS MATERIALIZED (
   SELECT vec_id AS query_id, cid, qres FROM (
     SELECT v.vec_id, c.cid,
            list_transform(generate_series(1, {EMB_DIM}),
@@ -1059,13 +1059,13 @@ qprobe AS (
     for m in range(1, PQ_M + 1):
         off = (m - 1) * PQ_SUB
         parts.append(f""",
-rsv{m} AS (
+rsv{m} AS MATERIALIZED (
   SELECT vec_id,
          list_transform(generate_series({off + 1}, {off + PQ_SUB}),
                         d -> vi[d]) AS vi
   FROM resid
 ),
-rc{m}_0 AS (
+rc{m}_0 AS MATERIALIZED (
   SELECT CAST(vec_id AS INTEGER) AS cid, vi AS ci
   FROM rsv{m} WHERE vec_id < {PQ_K}
 )""")
@@ -1078,7 +1078,7 @@ rc{m}_0 AS (
             prevm = f"rc{m}_{it}"
         parts.append("," + assign(f"rsv{m}", prevm, f"rcode{m}"))
         parts.append(f""",
-adc{m} AS (
+adc{m} AS MATERIALIZED (
   SELECT q.query_id, q.cid, {m} AS m, c.cid AS code,
          list_sum(list_transform(generate_series(1, {PQ_SUB}),
            d -> (q.qres[{off} + d] - c.ci[d]) * (q.qres[{off} + d] - c.ci[d])))
@@ -1093,20 +1093,20 @@ adc{m} AS (
         f"SELECT * FROM adc{m}" for m in range(1, PQ_M + 1)
     )
     return f"""
-WITH emb AS (
+WITH emb AS MATERIALIZED (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
-vecs AS (
+vecs AS MATERIALIZED (
   SELECT vec_id,
          list_transform(v, x -> CAST(ROUND(x * {IVF_SCALE}) AS BIGINT)) AS vi
   FROM emb
 ),
-cents0 AS (
+cents0 AS MATERIALIZED (
   SELECT CAST(vec_id AS INT) AS cid, vi AS ci FROM vecs WHERE vec_id < {IVF_K}
 ){"".join(parts)},
-codes AS ({codes_union}),
-adc AS ({adc_union}),
-adist AS (
+codes AS MATERIALIZED ({codes_union}),
+adc AS MATERIALIZED ({adc_union}),
+adist AS MATERIALIZED (
   SELECT a.query_id, c.vec_id, SUM(a.d) AS adist
   FROM codes c
   JOIN final_assign f USING (vec_id)
@@ -1114,7 +1114,7 @@ adist AS (
   WHERE c.vec_id >= {N_QUERIES}
   GROUP BY a.query_id, c.vec_id
 ),
-short AS (
+short AS MATERIALIZED (
   SELECT query_id, vec_id AS cand_id FROM (
     SELECT query_id, vec_id,
            ROW_NUMBER() OVER (PARTITION BY query_id
@@ -1122,7 +1122,7 @@ short AS (
     FROM adist
   ) WHERE rk_adc <= {IVFPQ_RERANK}
 ),
-scored AS (
+scored AS MATERIALIZED (
   SELECT s.query_id, s.cand_id,
          list_sum(list_transform(generate_series(1, len(eq.v)), i -> eq.v[i] * ec.v[i]))
          / (sqrt(list_sum(list_transform(generate_series(1, len(eq.v)), i -> eq.v[i] * eq.v[i])))

@@ -3,7 +3,10 @@
 The Spark-side shape is the production pattern: a pruned ``(url, data:
 binary)`` projection into ONE Arrow ``mapInPandas`` stage that emits typed
 feature columns — no per-row Python UDFs, no payload shuffle (the stage is
-scan-aligned).
+scan-aligned). Every consumer here is an emitter ``(url, raw) → row
+tuples`` run by ``pipeline.relation``, the per-document driver the
+extraction relations use, so a truncated image or container gives no rows
+instead of failing the job.
 
 The codec layer is REAL and pure-Python throughout: container-header
 parsers (PNG IHDR, JPEG SOFn, GIF logical-screen descriptor, BMP DIB
@@ -21,20 +24,20 @@ DuckDB oracle state expected type, dimensions, and byte count in plain SQL
 
 from __future__ import annotations
 
+import functools
 import math
-import os
 import struct
 import zlib
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import spec
-from ..session import drop_zip_finders
+from .. import api, spec
+from ..pipeline import relation
+from ..sources.pagesgen import fixture_table, load_or_build_pages
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -803,56 +806,23 @@ def build_media(doc_id: int) -> bytes:
 # ---------------------------------------------------------------------------
 
 
+#: the driver's input columns for a media table: (key, payload)
+MEDIA_COLS = ("url", "data")
+
+
+def _media_rows(url: str, raw: bytes) -> Iterator[tuple]:
+    mt, w, h = parse_image(raw)
+    yield (url, mt, len(raw), w, h)
+
+
 def media_features(media: DataFrame) -> DataFrame:
     """(url, data:binary) → typed metadata via one Arrow mapInPandas stage
     with the input pruned to exactly the two consumed columns."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
-        for pdf in it:
-            out = {k: [] for k in ("url", "media_type", "n_bytes", "width", "height")}
-            for url, data in zip(pdf["url"], pdf["data"]):
-                raw = bytes(data)
-                mt, w, h = parse_image(raw)
-                out["url"].append(url)
-                out["media_type"].append(mt)
-                out["n_bytes"].append(len(raw))
-                out["width"].append(w)
-                out["height"].append(h)
-            yield pd.DataFrame(out)
-
-    return media.select("url", "data").mapInPandas(batches, schema=MEDIA_SCHEMA)
-
-
-def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthetic media table: one structurally-valid image per document,
-    built in the same scan-aligned pattern a binary ingest column has."""
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("data", T.BinaryType()),
-        ]
-    )
-
-    def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "data": [build_media(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs.select(
-        "doc_id", F.expr(spec.SQL_URL).alias("url")
-    ).mapInPandas(build, schema=schema)
+    return relation(media, _media_rows, MEDIA_SCHEMA, MEDIA_COLS)
 
 
 def media_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return media_features(media_table(spark, sf_dir))
+    return media_features(fixture_table(spark, sf_dir, build_media, "data"))
 
 
 PIXEL_SCHEMA = T.StructType(
@@ -867,6 +837,12 @@ PIXEL_SCHEMA = T.StructType(
 )
 
 
+def _pixel_rows(url: str, raw: bytes) -> Iterator[tuple]:
+    _w, _h, _bpp, px = decode_pixels(raw)
+    total = sum(px)
+    yield (url, len(px), total, min(px), max(px), round(total / len(px), 4))
+
+
 def media_pixel_stats(media: DataFrame) -> DataFrame:
     """Per-image pixel statistics from REAL decodes of ALL THREE fixture
     formats — PNG (inflate + unfilter), baseline JPEG (Huffman + dequant
@@ -874,34 +850,11 @@ def media_pixel_stats(media: DataFrame) -> DataFrame:
     (url, data) projection into one Arrow mapInPandas stage — the same
     scan-aligned shape as media_features, over decoded samples.
     sum/min/max are exact integers, mean rounds at 4 dp."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
-        for pdf in it:
-            out = {k: [] for k in PIXEL_SCHEMA.fieldNames()}
-            for url, data in zip(pdf["url"], pdf["data"]):
-                raw = bytes(data)
-                if raw[:8] == _PNG_SIG:
-                    _w, _h, _bpp, px = decode_png_pixels(raw)
-                elif raw[:2] == b"\xff\xd8":
-                    _w, _h, _bpp, px = decode_jpeg_pixels(raw)
-                elif raw[:6] in (b"GIF87a", b"GIF89a"):
-                    _w, _h, _bpp, px = decode_gif_pixels(raw)
-                else:
-                    continue
-                out["url"].append(url)
-                out["n_pixels"].append(len(px))
-                out["px_sum"].append(sum(px))
-                out["px_min"].append(min(px))
-                out["px_max"].append(max(px))
-                out["px_mean"].append(round(sum(px) / len(px), 4))
-            yield pd.DataFrame(out)
-
-    return media.select("url", "data").mapInPandas(batches, schema=PIXEL_SCHEMA)
+    return relation(media, _pixel_rows, PIXEL_SCHEMA, MEDIA_COLS)
 
 
 def media_pixel_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return media_pixel_stats(media_table(spark, sf_dir))
+    return media_pixel_stats(fixture_table(spark, sf_dir, build_media, "data"))
 
 
 def media_pixel_stats_oracle() -> str:
@@ -955,16 +908,29 @@ FROM documents
 """
 
 
-PAGE_RENDER_SCHEMA = (
-    "url string, page_no long, w_px long, h_px long,"
-    " has_glyphs boolean, levels_ok boolean"
+PAGE_RENDER_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("page_no", T.LongType()),
+        T.StructField("w_px", T.LongType()),
+        T.StructField("h_px", T.LongType()),
+        T.StructField("has_glyphs", T.BooleanType()),
+        T.StructField("levels_ok", T.BooleanType()),
+    ]
 )
 
 #: the renderer's exact gray palette (api.Page.to_image)
 _RENDER_LEVELS = frozenset({255, 220, 160, 96, 32})
 
 
-def render_pdf_pages(spark, sf_dir: str):
+def _render_rows(url: str, raw: bytes) -> Iterator[tuple]:
+    doc = api.open_bytes(raw)
+    for i in range(1, doc.page_count() + 1):
+        w, h, _ch, pix = decode_png_pixels(doc.get_page(i).to_image())
+        yield (url, i, w, h, 160 in pix, set(pix) <= _RENDER_LEVELS)
+
+
+def render_pdf_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed ``Page.to_image`` over the PDF corpus: one
     Arrow-batched mapInPandas pass opens each payload with the facade
     API, renders every page to a grayscale PNG, and emits closed-form
@@ -975,36 +941,10 @@ def render_pdf_pages(spark, sf_dir: str):
     stubs ToImage in all three backends — page/page.go:224-232 — so this
     is beyond-parity surface; the scale shape is the extraction kernel's:
     scan-aligned, no payload shuffle, pure map-side.)"""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from ..sources.pagesgen import load_or_build_pages
-
-    def render(batches):
-        drop_zip_finders()
-        from .. import api
-
-        for b in batches:
-            out = {k: [] for k in
-                   ("url", "page_no", "w_px", "h_px", "has_glyphs",
-                    "levels_ok")}
-            for url, raw in zip(b["url"], b["html"]):
-                doc = api.open_bytes(bytes(raw))
-                for i in range(1, doc.page_count() + 1):
-                    png = doc.get_page(i).to_image()
-                    w, h, _ch, pix = decode_png_pixels(png)
-                    out["url"].append(url)
-                    out["page_no"].append(i)
-                    out["w_px"].append(w)
-                    out["h_px"].append(h)
-                    out["has_glyphs"].append(160 in pix)
-                    out["levels_ok"].append(set(pix) <= _RENDER_LEVELS)
-            yield pd.DataFrame(out)
-
     pages = load_or_build_pages(spark, sf_dir).where(
         F.col("variant").startswith("pdf_")
-    ).select("url", "html")
-    return pages.mapInPandas(render, PAGE_RENDER_SCHEMA)
+    )
+    return relation(pages, _render_rows, PAGE_RENDER_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1014,10 +954,28 @@ def render_pdf_pages(spark, sf_dir: str):
 
 THUMB_W, THUMB_H = 16, 12
 
-RESIZE_SCHEMA = (
-    "url string, thumb_w long, thumb_h long,"
-    " t_sum long, t_min long, t_max long"
+RESIZE_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("thumb_w", T.LongType()),
+        T.StructField("thumb_h", T.LongType()),
+        T.StructField("t_sum", T.LongType()),
+        T.StructField("t_min", T.LongType()),
+        T.StructField("t_max", T.LongType()),
+    ]
 )
+
+
+def _resize_rows(url: str, raw: bytes) -> Iterator[tuple]:
+    w, h, _bpp, px = decode_pixels(raw)
+    thumb = bytes(
+        px[(y * h // THUMB_H) * w + (x * w // THUMB_W)]
+        for y in range(THUMB_H)
+        for x in range(THUMB_W)
+    )
+    # round-trip through the real encoder before measuring
+    tw, th, _c, tpx = decode_png_pixels(encode_gray_png(THUMB_W, THUMB_H, thumb))
+    yield (url, tw, th, sum(tpx), min(tpx), max(tpx))
 
 
 def media_resize(media: DataFrame) -> DataFrame:
@@ -1031,44 +989,11 @@ def media_resize(media: DataFrame) -> DataFrame:
     resize too (baseline-DCT / LZW decoders), so every fixture format
     transcodes into a PNG thumbnail — the shape of a real thumbnail
     service."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
-        for pdf in it:
-            out = {k: [] for k in
-                   ("url", "thumb_w", "thumb_h", "t_sum", "t_min", "t_max")}
-            for url, data in zip(pdf["url"], pdf["data"]):
-                raw = bytes(data)
-                if raw[:8] == _PNG_SIG:
-                    w, h, _bpp, px = decode_png_pixels(raw)
-                elif raw[:2] == b"\xff\xd8":
-                    w, h, _bpp, px = decode_jpeg_pixels(raw)
-                elif raw[:6] in (b"GIF87a", b"GIF89a"):
-                    w, h, _bpp, px = decode_gif_pixels(raw)
-                else:
-                    continue
-                thumb = bytes(
-                    px[(y * h // THUMB_H) * w + (x * w // THUMB_W)]
-                    for y in range(THUMB_H)
-                    for x in range(THUMB_W)
-                )
-                # round-trip through the real encoder before measuring
-                _tw, _th, _c, tpx = decode_png_pixels(
-                    encode_gray_png(THUMB_W, THUMB_H, thumb)
-                )
-                out["url"].append(url)
-                out["thumb_w"].append(_tw)
-                out["thumb_h"].append(_th)
-                out["t_sum"].append(sum(tpx))
-                out["t_min"].append(min(tpx))
-                out["t_max"].append(max(tpx))
-            yield pd.DataFrame(out)
-
-    return media.select("url", "data").mapInPandas(batches, RESIZE_SCHEMA)
+    return relation(media, _resize_rows, RESIZE_SCHEMA, MEDIA_COLS)
 
 
 def media_resize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return media_resize(media_table(spark, sf_dir))
+    return media_resize(fixture_table(spark, sf_dir, build_media, "data"))
 
 
 def media_resize_oracle() -> str:
@@ -1109,7 +1034,14 @@ VIDEO_MAGIC = b"FVID"
 FRAME_SAMPLE_K = 3
 _NF_MOD = 7  # n_frames = 2 + doc_id % _NF_MOD
 
-FRAME_SCHEMA = "url string, frame_idx long, width long, height long"
+FRAME_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("frame_idx", T.LongType()),
+        T.StructField("width", T.LongType()),
+        T.StructField("height", T.LongType()),
+    ]
+)
 
 
 def video_bytes(doc_id: int) -> bytes:
@@ -1127,24 +1059,23 @@ def video_bytes(doc_id: int) -> bytes:
     return VIDEO_MAGIC + struct.pack(">I", n) + b"".join(frames)
 
 
-def video_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    schema = T.StructType(
-        [T.StructField("url", T.StringType()),
-         T.StructField("data", T.BinaryType())]
-    )
-
-    def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
-        for pdf in it:
-            yield pd.DataFrame(
-                {"url": pdf["url"],
-                 "data": [video_bytes(int(d)) for d in pdf["doc_id"]]}
-            )
-
-    return docs.select(
-        "doc_id", F.expr(spec.SQL_URL).alias("url")
-    ).mapInPandas(build, schema=schema)
+def _frame_rows(url: str, raw: bytes, k: int) -> Iterator[tuple]:
+    if raw[:4] != VIDEO_MAGIC:
+        return
+    (n,) = struct.unpack(">I", raw[4:8])
+    pos = 8
+    for i in range(n):
+        # truncated container: a short length field ends the walk,
+        # emitting the frames that ARE complete
+        if len(raw) - pos < 4:
+            break
+        (ln,) = struct.unpack(">I", raw[pos : pos + 4])
+        frame = raw[pos + 4 : pos + 4 + ln]
+        pos += 4 + ln
+        if i % k:
+            continue
+        _mt, w, h = parse_image(frame)
+        yield (url, i, w, h)
 
 
 def media_frame_sample(video: DataFrame, k: int = FRAME_SAMPLE_K) -> DataFrame:
@@ -1153,40 +1084,12 @@ def media_frame_sample(video: DataFrame, k: int = FRAME_SAMPLE_K) -> DataFrame:
     header-parse each sampled frame with the real parse_image — one
     pruned Arrow stage fanning out to multiple rows per doc (the batch
     shape a real decoder UDF has)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
-        for pdf in it:
-            out = {kk: [] for kk in ("url", "frame_idx", "width", "height")}
-            for url, data in zip(pdf["url"], pdf["data"]):
-                raw = bytes(data)
-                if raw[:4] != VIDEO_MAGIC:
-                    continue
-                (n,) = struct.unpack(">I", raw[4:8])
-                pos = 8
-                for i in range(n):
-                    # truncated container: a short length field ends the
-                    # walk (emitting the frames that ARE complete) rather
-                    # than raising out of the executor task
-                    if len(raw) - pos < 4:
-                        break
-                    (ln,) = struct.unpack(">I", raw[pos : pos + 4])
-                    frame = raw[pos + 4 : pos + 4 + ln]
-                    pos += 4 + ln
-                    if i % k:
-                        continue
-                    _mt, w, h = parse_image(frame)
-                    out["url"].append(url)
-                    out["frame_idx"].append(i)
-                    out["width"].append(w)
-                    out["height"].append(h)
-            yield pd.DataFrame(out)
-
-    return video.select("url", "data").mapInPandas(batches, FRAME_SCHEMA)
+    emit = functools.partial(_frame_rows, k=k)
+    return relation(video, emit, FRAME_SCHEMA, MEDIA_COLS)
 
 
 def media_frame_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return media_frame_sample(video_table(spark, sf_dir))
+    return media_frame_sample(fixture_table(spark, sf_dir, video_bytes, "data"))
 
 
 def media_frame_sample_oracle() -> str:

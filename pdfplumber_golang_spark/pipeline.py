@@ -3,21 +3,26 @@
 Spark-first design (SURVEY §3.2 "Spark shape"):
   * one ``mapInPandas`` stage runs the whole per-document kernel
     (bytes → chars → layout → text) — no cross-node boundary inside a doc;
-  * all eight relations (pages, chars, images, annotations, table cells,
-    curves, edges, metadata) run through one per-document driver,
-    ``_per_doc``: a relation is an emitter generator ``(url, raw) → row
-    tuples`` plus its schema, and the driver builds each batch with one
-    ``pd.DataFrame`` call;
+  * every Python stage that reads payloads runs through one per-document
+    driver, ``per_doc``/``relation``: the eight relations here (pages,
+    chars, images, annotations, table cells, curves, edges, metadata), the
+    media, frame-sample and page-render stages of ``functions.multimodal``
+    and the WARC record parser of ``sources.warc``. A stage is an emitter
+    generator ``(key, raw) → row tuples`` plus its schema and its two input
+    columns, and the driver builds each batch with one ``pd.DataFrame``
+    call. Only the input generators in ``sources.pagesgen`` run
+    their own ``mapInPandas``, because a generator bug must fail the job;
   * the driver drops the Python worker's cached ``zipimporter`` finders
     once per task, so the next task's ``importlib.invalidate_caches()``
     does not re-read all of ``pyspark.zip`` (``session.drop_zip_finders``);
   * one failure policy, in the driver: a doc whose emitter raises
-    contributes no rows. The pages relation still reports failures as an
-    ``error`` row, because ``extract_document`` returns the error as a
-    value that the pages emitter yields as data. The seven other relations
-    are PDF-only: HTML and other non-PDF payloads give them no rows;
+    contributes no rows, so one truncated image or WARC file cannot fail
+    the job. The pages relation still reports failures as an ``error``
+    row, because ``extract_document`` returns the error as a value that
+    the pages emitter yields as data. The seven other relations are
+    PDF-only: HTML and other non-PDF payloads give them no rows;
   * explicit column pruning before the UDF (a pandas UDF is opaque to
-    Catalyst, so we select only (url, html) ourselves);
+    Catalyst, so the driver selects only its two input columns);
   * skew (``extract_pages``): optionally repartition by ``xxhash64(url)``
     with an extra salt bucket for mega-payloads (``length(html) >
     threshold``) so one hot partition can't stall the stage (north_rule
@@ -156,42 +161,51 @@ METADATA_SCHEMA = T.StructType(
 MEGA_BYTES = 64 * 1024
 N_SALT = 8
 
-#: a relation's per-document kernel: (url, raw payload) → row tuples in
+#: a stage's per-document kernel: (key, raw payload) → row tuples in
 #: schema order
 Emitter = Callable[[str, bytes], Iterable[tuple]]
 
+#: the driver's input columns for a pages table: (key, payload)
+PAGES_COLS = ("url", "html")
 
-def _per_doc(
-    emit: Emitter, schema: T.StructType
+
+def per_doc(
+    emit: Emitter, schema: T.StructType, cols: tuple[str, str] = PAGES_COLS
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """The ``mapInPandas`` function that runs ``emit`` once per doc.
+    """The ``mapInPandas`` function that runs ``emit`` once per doc, over
+    the (key, payload) columns ``cols``.
 
     A doc whose emitter raises contributes no rows: its rows are collected
     in full before any is kept, so a failure on page 3 cannot leave pages 1
     and 2 behind. A non-PDF payload fails the PDF-only emitters at
     ``PDFDocument``'s header check, so it gives them no rows."""
-    cols = schema.fieldNames()
+    key_col, raw_col = cols
+    names = schema.fieldNames()
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         drop_zip_finders()
         for pdf in it:
             rows: list[tuple] = []
-            for url, raw in zip(pdf["url"], pdf["html"]):
+            for key, raw in zip(pdf[key_col], pdf[raw_col]):
                 try:
-                    doc_rows = list(emit(url, bytes(raw)))
+                    doc_rows = list(emit(key, bytes(raw)))
                 except Exception:  # malformed inputs must never kill the executor
                     continue
                 rows.extend(doc_rows)
-            yield pd.DataFrame(rows, columns=cols)
+            yield pd.DataFrame(rows, columns=names)
 
     return batches
 
 
-def _relation(pages: DataFrame, emit: Emitter, schema: T.StructType) -> DataFrame:
-    """pages table → one relation: (url, html) pruned, then the driver."""
-    return pages.select("url", "html").mapInPandas(
-        _per_doc(emit, schema), schema=schema
-    )
+def relation(
+    df: DataFrame,
+    emit: Emitter,
+    schema: T.StructType,
+    cols: tuple[str, str] = PAGES_COLS,
+) -> DataFrame:
+    """table → one relation: the (key, payload) columns ``cols`` pruned,
+    then the driver."""
+    return df.select(*cols).mapInPandas(per_doc(emit, schema, cols), schema=schema)
 
 
 def _page_rows(url: str, raw: bytes) -> Iterator[tuple]:
@@ -231,7 +245,7 @@ def extract_pages(
         pages = pages.select("url", "html").repartition(
             parallelism, F.xxhash64("url"), salt_col
         )
-    return _relation(pages, _page_rows, PAGE_ROWS_SCHEMA)
+    return relation(pages, _page_rows, PAGE_ROWS_SCHEMA)
 
 
 def _char_rows(url: str, raw: bytes) -> Iterator[tuple]:
@@ -242,7 +256,7 @@ def _char_rows(url: str, raw: bytes) -> Iterator[tuple]:
 
 def extract_chars(pages: DataFrame) -> DataFrame:
     """pages table → flat chars relation (SURVEY §1.1: the central relation)."""
-    return _relation(pages, _char_rows, CHAR_ROWS_SCHEMA)
+    return relation(pages, _char_rows, CHAR_ROWS_SCHEMA)
 
 
 def _image_rows(url: str, raw: bytes) -> Iterator[tuple]:
@@ -254,7 +268,7 @@ def _image_rows(url: str, raw: bytes) -> Iterator[tuple]:
 def extract_images(pages: DataFrame) -> DataFrame:
     """pages table → images relation (image-XObject metadata + placed
     bbox per Do; the reference's ImageObject schema slot made real)."""
-    return _relation(pages, _image_rows, IMAGE_ROWS_SCHEMA)
+    return relation(pages, _image_rows, IMAGE_ROWS_SCHEMA)
 
 
 def _annot_rows(url: str, raw: bytes) -> Iterator[tuple]:
@@ -267,7 +281,7 @@ def _annot_rows(url: str, raw: bytes) -> Iterator[tuple]:
 def extract_annotations(pages: DataFrame) -> DataFrame:
     """pages table → annotations relation (/Annots subtype, rect,
     contents, link URI — the reference's AnnotationObject slot made real)."""
-    return _relation(pages, _annot_rows, ANNOT_ROWS_SCHEMA)
+    return relation(pages, _annot_rows, ANNOT_ROWS_SCHEMA)
 
 
 def _table_rows(url: str, raw: bytes, **table_opts) -> Iterator[tuple]:
@@ -289,7 +303,7 @@ def extract_tables_df(pages: DataFrame, **table_opts) -> DataFrame:
     over by the Arrow stage, exactly like the reference's functional
     options (types.go:366-393)."""
     emit = functools.partial(_table_rows, **table_opts)
-    return _relation(pages, emit, TABLE_ROWS_SCHEMA)
+    return relation(pages, emit, TABLE_ROWS_SCHEMA)
 
 
 def _curve_rows(url: str, raw: bytes) -> Iterator[tuple]:
@@ -305,7 +319,7 @@ def extract_curves(pages: DataFrame) -> DataFrame:
     bbox). CurveObjects are non-axis stroked point chains and non-rect
     fills (kernel/content.py _emit_stroke/_emit_fill; reference populates
     them at content_stream_parser.go:1259-1357)."""
-    return _relation(pages, _curve_rows, CURVE_ROWS_SCHEMA)
+    return relation(pages, _curve_rows, CURVE_ROWS_SCHEMA)
 
 
 def _edge_rows(url: str, raw: bytes) -> Iterator[tuple]:
@@ -319,7 +333,7 @@ def _edge_rows(url: str, raw: bytes) -> Iterator[tuple]:
 
 def extract_edges(pages: DataFrame) -> DataFrame:
     """pages table → flat edges relation (lines + rect-expanded edges, T3)."""
-    return _relation(pages, _edge_rows, EDGE_ROWS_SCHEMA)
+    return relation(pages, _edge_rows, EDGE_ROWS_SCHEMA)
 
 
 def _metadata_rows(url: str, raw: bytes) -> Iterator[tuple]:
@@ -329,7 +343,7 @@ def _metadata_rows(url: str, raw: bytes) -> Iterator[tuple]:
 
 def extract_metadata_df(pages: DataFrame) -> DataFrame:
     """pages table → PDF /Info metadata rows (Title/Author/Producer)."""
-    return _relation(pages, _metadata_rows, METADATA_SCHEMA)
+    return relation(pages, _metadata_rows, METADATA_SCHEMA)
 
 
 def doc_text(page_rows: DataFrame) -> DataFrame:

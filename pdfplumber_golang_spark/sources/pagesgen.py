@@ -16,8 +16,9 @@ identically).
 from __future__ import annotations
 
 import datetime
+import functools
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -126,6 +127,31 @@ def build_curves_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stroked beziers + a filled triangle (variant pdf_curves), geometry
     closed-form in doc_id — the curves-relation corpus."""
     return _variant_pages(spark, sf_dir, "pdf_curves")
+
+
+def _fixture_batches(
+    it: Iterator[pd.DataFrame], build: Callable[[int], bytes], col: str
+) -> Iterator[pd.DataFrame]:
+    drop_zip_finders()
+    for pdf in it:
+        yield pd.DataFrame(
+            {"url": pdf["url"], col: [build(int(d)) for d in pdf["doc_id"]]}
+        )
+
+
+def fixture_table(
+    spark: SparkSession, sf_dir: str, build: Callable[[int], bytes], col: str
+) -> DataFrame:
+    """(url, ``col``: binary) with one closed-form payload ``build(doc_id)``
+    per document: the media, video and fixture-PDF tables.
+
+    Loud, unlike the per-document driver: a fixture is a pure function of
+    ``doc_id``, so a ``build`` that raises is a bug and fails the job."""
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return docs.select("doc_id", F.expr(spec.SQL_URL).alias("url")).mapInPandas(
+        functools.partial(_fixture_batches, build=build, col=col),
+        schema=f"url string, {col} binary",
+    )
 
 
 def pages_cache_path(sf_dir: str) -> str:

@@ -6,24 +6,23 @@ bytes + CRLF CRLF. Common Crawl ships each record as its own gzip member in
 a concatenated-gzip .warc.gz; both plain and gzipped forms are supported.
 
 Spark shape: ``spark.read.format("binaryFile")`` (one row per WARC file)
-→ mapInPandas record parser → the standard pages schema. At 10^12 docs the
-files (~1GB each) are the natural parallel unit, exactly how Common Crawl
-distributes.
+→ the record parser as a ``pipeline.relation`` emitter over ``(path,
+content)`` → the standard pages schema. At 10^12 docs the files (~1GB
+each) are the natural parallel unit, exactly how Common Crawl distributes;
+a malformed file gives no rows, under the driver's one failure policy.
 """
 
 from __future__ import annotations
 
 import gzip
-import io
 import zlib
 from collections.abc import Iterator
 from datetime import datetime, timezone
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..session import drop_zip_finders
+from ..pipeline import relation
 
 CRLF = b"\r\n"
 
@@ -118,19 +117,12 @@ def parse_warc(data: bytes) -> list[tuple[str, datetime, bytes]]:
 
 # --------------------------------------------------------------- source ---
 
+def _warc_rows(_path: str, blob: bytes) -> Iterator[tuple]:
+    for url, ts, payload in parse_warc(blob):
+        yield (url, ts.replace(tzinfo=None), payload)
+
+
 def read_warc_pages(spark: SparkSession, warc_dir: str) -> DataFrame:
     """WARC files → (url, warc_ts, html) pages DataFrame."""
-    files = spark.read.format("binaryFile").load(warc_dir).select("content")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
-        for pdf in it:
-            urls, tss, payloads = [], [], []
-            for blob in pdf["content"]:
-                for url, ts, payload in parse_warc(bytes(blob)):
-                    urls.append(url)
-                    tss.append(ts.replace(tzinfo=None))
-                    payloads.append(payload)
-            yield pd.DataFrame({"url": urls, "warc_ts": tss, "html": payloads})
-
-    return files.mapInPandas(batches, schema=WARC_PAGES_SCHEMA)
+    files = spark.read.format("binaryFile").load(warc_dir)
+    return relation(files, _warc_rows, WARC_PAGES_SCHEMA, ("path", "content"))

@@ -1,9 +1,12 @@
 """The per-document driver of ``pipeline`` over plain pandas batches.
 
-No JVM: each relation's emitter runs through ``pipeline._per_doc`` exactly
-as ``mapInPandas`` would call it, and the batches it yields are checked
-against the relation's schema with the Arrow conversion Spark applies."""
+No JVM: each relation's emitter, and each media, page-render and WARC
+emitter, runs through ``pipeline.per_doc`` exactly as ``mapInPandas``
+would call it, and the batches it yields are checked against the stage's
+schema with the Arrow conversion Spark applies."""
 
+import datetime
+import functools
 import importlib
 import sys
 import zipfile
@@ -16,7 +19,9 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from pdfplumber_golang_spark import pipeline
+from pdfplumber_golang_spark.functions import multimodal as mm
 from pdfplumber_golang_spark.session import drop_zip_finders
+from pdfplumber_golang_spark.sources import pagesgen, warc
 from pdfplumber_golang_spark.kernel.pdfwrite import (
     build_annot_pdf,
     build_image_pdf,
@@ -45,8 +50,8 @@ RELATIONS = {
 }
 
 
-def _drive(emit, schema, batch) -> pd.DataFrame:
-    out = list(pipeline._per_doc(emit, schema)(iter([batch])))
+def _drive(emit, schema, batch, cols=pipeline.PAGES_COLS) -> pd.DataFrame:
+    out = list(pipeline.per_doc(emit, schema, cols)(iter([batch])))
     assert len(out) == 1
     frame = out[0]
     assert list(frame.columns) == schema.fieldNames()
@@ -93,9 +98,69 @@ def test_all_junk_batch(relation):
         assert frame.empty
 
 
-@pytest.mark.parametrize("relation", sorted(RELATIONS))
+PNG, JPEG, GIF = mm.png_bytes(9, 7), mm.jpeg_bytes(17, 23), mm.gif_bytes(9, 7)
+BAD_IMAGES = {
+    "png_10": PNG[:10],
+    "png_half": PNG[: len(PNG) // 2],
+    "jpeg_half": JPEG[: len(JPEG) // 2],
+    "gif_half": GIF[: len(GIF) // 2],
+}
+_TS = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
+WARC = warc.build_warc([("http://a.example/", _TS, HTML), ("http://b.example/", _TS, HTML)])
+
+# payload stage -> (emitter, schema, driver columns, a valid payload,
+# truncated or malformed payloads)
+CONSUMERS = {
+    "media_features": (mm._media_rows, mm.MEDIA_SCHEMA, mm.MEDIA_COLS, PNG, BAD_IMAGES),
+    "media_pixel_stats": (mm._pixel_rows, mm.PIXEL_SCHEMA, mm.MEDIA_COLS, JPEG, BAD_IMAGES),
+    "media_resize": (mm._resize_rows, mm.RESIZE_SCHEMA, mm.MEDIA_COLS, GIF, BAD_IMAGES),
+    "media_frame_sample": (
+        functools.partial(mm._frame_rows, k=mm.FRAME_SAMPLE_K),
+        mm.FRAME_SCHEMA, mm.MEDIA_COLS, mm.video_bytes(9),
+        {"fvid_6": b"FVID\x00\x00", "fvid_7": b"FVID\x00\x00\x01"},
+    ),
+    "page_render": (
+        mm._render_rows, mm.PAGE_RENDER_SCHEMA, pipeline.PAGES_COLS,
+        _pdf("pdf_plain"), {"junk": JUNK, "pdf_cut": _pdf("pdf_plain")[:400]},
+    ),
+    "warc": (
+        warc._warc_rows, warc.WARC_PAGES_SCHEMA, ("path", "content"), WARC,
+        {"bad_length": WARC.replace(b"Content-Length: ", b"Content-Length: x", 1)},
+    ),
+}
+
+
+@pytest.mark.parametrize("stage", sorted(CONSUMERS))
+def test_payload_stage_drops_bad_docs(stage):
+    emit, schema, cols, good, bad = CONSUMERS[stage]
+    batch = pd.DataFrame({cols[0]: ["good", *bad], cols[1]: [good, *bad.values()]})
+    frame = _drive(emit, schema, batch, cols)
+    if stage == "warc":  # the key is the file; rows carry the records' urls
+        assert list(frame["url"]) == ["http://a.example/", "http://b.example/"]
+        return
+    assert (frame["url"] == "good").sum() > 0
+    if stage == "media_features":
+        # a header parse degrades instead of raising: one row per doc
+        assert sorted(frame["url"]) == sorted(batch["url"])
+        assert frame.loc[frame["url"] == "png_10", "width"].isna().all()
+    else:
+        assert set(frame["url"]) == {"good"}
+
+
+def test_fixture_generator_is_loud():
+    def build(doc_id):
+        if doc_id == 2:
+            raise ValueError("fixture bug")
+        return bytes([doc_id])
+
+    batch = pd.DataFrame({"doc_id": [1, 2], "url": ["a", "b"]})
+    with pytest.raises(ValueError, match="fixture bug"):
+        list(pagesgen._fixture_batches(iter([batch]), build, "data"))
+
+
+@pytest.mark.parametrize("relation", sorted(RELATIONS) + sorted(CONSUMERS))
 def test_empty_frame_matches_schema(relation):
-    _emit, schema, _pdf_bytes = RELATIONS[relation]
+    schema = (RELATIONS.get(relation) or CONSUMERS[relation])[1]
 
     def emit(url, raw):
         raise ValueError(url)
