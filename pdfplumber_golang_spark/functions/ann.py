@@ -87,7 +87,7 @@ def ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ann_bruteforce_oracle() -> str:
     return f"""
-WITH emb AS MATERIALIZED (
+WITH emb AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
 scored AS (
@@ -160,7 +160,7 @@ def embedding_cosine_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def embedding_cosine_dups_oracle() -> str:
     return f"""
-WITH emb AS MATERIALIZED (
+WITH emb AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
 scored AS (
@@ -336,7 +336,7 @@ def dedup_embedding_lsh_oracle() -> str:
         "2 * (ascii(substr(md5(CAST(j AS STRING) || '_' || CAST(d - 1 AS STRING)), 1, 1)) % 2) - 1"
     )
     return f"""
-WITH emb AS MATERIALIZED (
+WITH emb AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
 proj AS (
@@ -403,7 +403,7 @@ def ann_lsh_oracle() -> str:
         "2 * (ascii(substr(md5(CAST(j AS STRING) || '_' || CAST(d - 1 AS STRING)), 1, 1)) % 2) - 1"
     )
     return f"""
-WITH emb AS MATERIALIZED (
+WITH emb AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
 sigs AS (
@@ -619,7 +619,7 @@ def ann_ivf_oracle() -> str:
 )"""
 
     return f"""
-WITH emb AS MATERIALIZED (
+WITH emb AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
 vecs AS (
@@ -817,7 +817,7 @@ qd{m} AS (
         f"SELECT * FROM qd{m}" for m in range(1, PQ_M + 1)
     )
     return f"""
-WITH emb AS MATERIALIZED (
+WITH emb AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
 vecs AS (

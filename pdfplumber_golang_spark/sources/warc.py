@@ -8,8 +8,10 @@ a concatenated-gzip .warc.gz; both plain and gzipped forms are supported.
 Spark shape: ``spark.read.format("binaryFile")`` (one row per WARC file)
 → the record parser as a ``pipeline.relation`` emitter over ``(path,
 content)`` → the standard pages schema. At 10^12 docs the files (~1GB
-each) are the natural parallel unit, exactly how Common Crawl distributes;
-a malformed file gives no rows, under the driver's one failure policy.
+each) are the natural parallel unit, exactly how Common Crawl distributes.
+A record with a malformed Content-Length or WARC-Date is skipped and the
+rest of its file is kept; a file that cannot be read at all (a corrupt gzip
+member) gives no rows, under the driver's one failure policy.
 """
 
 from __future__ import annotations
@@ -99,15 +101,24 @@ def parse_warc(data: bytes) -> list[tuple[str, datetime, bytes]]:
         for line in data[start:hdr_end].split(CRLF)[1:]:
             k, _, v = line.partition(b":")
             headers[k.strip().decode("latin-1").lower()] = v.strip().decode("latin-1")
-        length = int(headers.get("content-length", "0"))
+        try:
+            length = int(headers.get("content-length", "0"))
+        except ValueError:
+            length = -1
+        if length < 0:  # record extent unknown: skip it, resync on the next marker
+            pos = hdr_end + 4
+            continue
         body = data[hdr_end + 4 : hdr_end + 4 + length]
         pos = hdr_end + 4 + length
         if headers.get("warc-type") != "response":
             continue
         url = headers.get("warc-target-uri", "")
-        ts = datetime.strptime(
-            headers.get("warc-date", "1970-01-01T00:00:00Z"), "%Y-%m-%dT%H:%M:%SZ"
-        ).replace(tzinfo=timezone.utc)
+        try:
+            ts = datetime.strptime(
+                headers.get("warc-date", "1970-01-01T00:00:00Z"), "%Y-%m-%dT%H:%M:%SZ"
+            ).replace(tzinfo=timezone.utc)
+        except ValueError:  # a malformed record is skipped, not its whole file
+            continue
         # strip the HTTP response header block
         split = body.find(CRLF + CRLF)
         payload = body[split + 4 :] if split >= 0 else body

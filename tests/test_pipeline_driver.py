@@ -125,7 +125,12 @@ CONSUMERS = {
     ),
     "warc": (
         warc._warc_rows, warc.WARC_PAGES_SCHEMA, ("path", "content"), WARC,
-        {"bad_length": WARC.replace(b"Content-Length: ", b"Content-Length: x", 1)},
+        {
+            "bad_length": WARC.replace(b"Content-Length: ", b"Content-Length: x", 1),
+            "bad_date": WARC.replace(b"WARC-Date: ", b"WARC-Date: x", 1),
+            "neg_length": WARC.replace(b"Content-Length: ", b"Content-Length: -", 1),
+            "bad_gzip": b"\x1f\x8b" + JUNK,
+        },
     ),
 }
 
@@ -136,7 +141,9 @@ def test_payload_stage_drops_bad_docs(stage):
     batch = pd.DataFrame({cols[0]: ["good", *bad], cols[1]: [good, *bad.values()]})
     frame = _drive(emit, schema, batch, cols)
     if stage == "warc":  # the key is the file; rows carry the records' urls
-        assert list(frame["url"]) == ["http://a.example/", "http://b.example/"]
+        # a malformed first record is skipped and the second kept; the corrupt
+        # gzip file gives no rows
+        assert list(frame["url"]) == ["http://a.example/"] + ["http://b.example/"] * 4
         return
     assert (frame["url"] == "good").sum() > 0
     if stage == "media_features":
