@@ -10,6 +10,8 @@ the goldens are pure SQL functions of the ``documents`` table, see
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -78,6 +80,20 @@ def _q_extract_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pipeline.doc_text(rows).select("url", "text")
 
 
+def _materialized(
+    spark: SparkSession, prefix: str, build: Callable[[str], DataFrame]
+) -> DataFrame:
+    """``build(root)`` in a fresh scratch dir, collected to the driver
+    before the dir is removed: for queries whose inputs, sinks or tables
+    live only as long as the call."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    try:
+        out = build(root)
+        return spark.createDataFrame(out.toPandas(), schema=out.schema)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def _q_extract_text_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC source end-to-end: the HTML docs serialized as Common-Crawl
     layout .warc.gz (one gzip member per record), read back through
@@ -85,9 +101,6 @@ def _q_extract_text_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     parser), routed through extraction — output must equal the same html
     goldens the pages-table path produces (source parity, S1/S15)."""
     import datetime
-    import os as _os
-    import shutil
-    import tempfile
 
     from pdfplumber_golang_spark.kernel.htmlwrite import build_html
     from pdfplumber_golang_spark.sources import warc as W
@@ -108,19 +121,17 @@ def _q_extract_text_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
             build_html(doc_id, spec.body_of(doc_id, text)),
         )
         files.setdefault(doc_id % 8, []).append(rec)
-    root = tempfile.mkdtemp(prefix="warc_q_")
-    try:
+
+    def build(root: str) -> DataFrame:
         for k, recs in files.items():
-            with open(_os.path.join(root, f"part-{k}.warc.gz"), "wb") as f:
+            with open(os.path.join(root, f"part-{k}.warc.gz"), "wb") as f:
                 f.write(W.build_warc(recs, gz=True))
         pages = W.read_warc_pages(spark, root)
-        out = pipeline.doc_text(pipeline.extract_pages(pages)).select(
+        return pipeline.doc_text(pipeline.extract_pages(pages)).select(
             "url", "text"
         )
-        pdf = out.toPandas()  # materialize before the temp dir disappears
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(pdf, schema=out.schema)
+
+    return _materialized(spark, "warc_q_", build)
 
 
 def _q_extract_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -130,32 +141,25 @@ def _q_extract_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     as v2 and extracted via read_incremental (only the added files reach
     Spark); the union of the two extraction outputs must equal the direct
     path's byte-identical goldens."""
-    import shutil
-    import tempfile
-
     from pdfplumber_golang_spark.sources import snapshots as S
 
     pages = load_or_build_pages(spark, sf_dir).where(
         F.col("variant") == "html"
     ).select("url", "html")
-    first = pages.where(F.crc32(F.col("url")) % 2 == 0)
-    second = pages.where(F.crc32(F.col("url")) % 2 == 1)
-    root = tempfile.mkdtemp(prefix="snap_q_")
-    try:
-        S.write_snapshot(first, root)
+
+    def build(root: str) -> DataFrame:
+        S.write_snapshot(pages.where(F.crc32(F.col("url")) % 2 == 0), root)
         out1 = pipeline.doc_text(
             pipeline.extract_pages(S.read_snapshot(spark, root))
         ).select("url", "text")
-        S.append_snapshot(second, root)
+        S.append_snapshot(pages.where(F.crc32(F.col("url")) % 2 == 1), root)
         inc = S.read_incremental(spark, root, since_version=1)
         out2 = pipeline.doc_text(pipeline.extract_pages(inc)).select(
             "url", "text"
         )
-        out = out1.unionByName(out2)
-        pdf = out.toPandas()  # materialize before the table dir disappears
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(pdf, schema=out.schema)
+        return out1.unionByName(out2)
+
+    return _materialized(spark, "snap_q_", build)
 
 
 def _q_snapshot_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -166,16 +170,13 @@ def _q_snapshot_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag) — the evolved reader must fill the old rows' new column and the
     new rows' old columns with NULL.  The final read's (doc_id, tag)
     pairs are stated closed-form by the oracle."""
-    import shutil
-    import tempfile
-
     from pdfplumber_golang_spark.sources import snapshots as S
 
     docs = spark.read.parquet(
         os.path.join(sf_dir, "documents.parquet")
     ).select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="snap_life_")
-    try:
+
+    def build(root: str) -> DataFrame:
         t = os.path.join(root, "tbl")
         S.write_snapshot(docs.where(F.col("doc_id") % 2 == 0), t)
         S.append_snapshot(docs.where(F.col("doc_id") % 2 == 1), t)
@@ -185,13 +186,11 @@ def _q_snapshot_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("late").alias("tag"),
         )
         S.append_snapshot_evolving(late, t)
-        out = S.read_snapshot(spark, t).select(
+        return S.read_snapshot(spark, t).select(
             F.col("doc_id").cast("long").alias("doc_id"), "tag"
         )
-        pdf = out.toPandas()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(pdf, schema="doc_id long, tag string")
+
+    return _materialized(spark, "snap_life_", build)
 
 
 def _q_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -204,12 +203,9 @@ def _q_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     span, so the emitted hash set must equal the batch DISTINCT set
     exactly: one row per distinct content hash, none lost, none doubled.
     (Which group member wins inside a microbatch is execution-order
-    dependent, so the gate projects the deterministic content hash;
-    first-occurrence semantics are pinned by the batch-twin parity test
-    in tests/test_streaming.py.)"""
-    import shutil
-    import tempfile
-
+    dependent, so the gate projects only the deterministic content hash.
+    No check pins which member is kept: the batch-twin parity test in
+    tests/test_streaming.py compares hash sets too.)"""
     from pdfplumber_golang_spark.streaming.dedup import stream_dedup_docs
 
     base = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
@@ -224,19 +220,15 @@ def _q_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("ts + make_dt_interval(0, 1, 0, 0)").alias("ts"),
         "text",
     )
-    root = tempfile.mkdtemp(prefix="sdedup_q_")
-    try:
+
+    def build(root: str) -> DataFrame:
         in_dir = os.path.join(root, "in")
         base.unionAll(dups).repartition(8).write.parquet(in_dir)
-        q = stream_dedup_docs(
+        return stream_dedup_docs(
             spark, in_dir, os.path.join(root, "out"), os.path.join(root, "ckpt")
-        )
-        q.awaitTermination(600)
-        out = spark.read.parquet(os.path.join(root, "out")).select("h")
-        pdf = out.toPandas()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(pdf, schema="h string")
+        ).select("h")
+
+    return _materialized(spark, "sdedup_q_", build)
 
 
 def _q_event_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -244,30 +236,19 @@ def _q_event_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined per-micro-batch against the broadcast static user dimension
     (customer -> segment).  Stateless (no watermark); the drained result
     must equal the batch inner join the oracle states."""
-    import shutil
-    import tempfile
-
     from pdfplumber_golang_spark.streaming.enrich import stream_enrich, user_dim
 
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    root = tempfile.mkdtemp(prefix="senrich_q_")
-    try:
+
+    def build(root: str) -> DataFrame:
         in_dir = os.path.join(root, "in")
         ev.repartition(8).write.parquet(in_dir)
-        q = stream_enrich(
-            spark, in_dir, user_dim(spark, sf_dir),
-            os.path.join(root, "out"), os.path.join(root, "ckpt"),
+        return stream_enrich(
+            spark, in_dir, os.path.join(root, "out"),
+            os.path.join(root, "ckpt"), user_dim(spark, sf_dir),
         )
-        q.awaitTermination(600)
-        out = spark.read.schema(
-            "event_id long, user_id long, event_type string, segment string"
-        ).parquet(os.path.join(root, "out"))
-        pdf = out.toPandas()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        pdf, schema="event_id long, user_id long, event_type string, segment string"
-    )
+
+    return _materialized(spark, "senrich_q_", build)
 
 
 def _q_event_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -277,27 +258,18 @@ def _q_event_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     preceding 6 hours.  The watermark horizon covers the replay span, so
     the drained result must equal the batch inner join the oracle
     states — row-exact, both join keys and the interval bound."""
-    import shutil
-    import tempfile
-
     from pdfplumber_golang_spark.streaming.join import stream_interval_join
 
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    root = tempfile.mkdtemp(prefix="sjoin_q_")
-    try:
+
+    def build(root: str) -> DataFrame:
         in_dir = os.path.join(root, "in")
         ev.repartition(8).write.parquet(in_dir)
-        q = stream_interval_join(
+        return stream_interval_join(
             spark, in_dir, os.path.join(root, "out"), os.path.join(root, "ckpt")
         )
-        q.awaitTermination(600)
-        out = spark.read.schema(
-            "click_id long, view_id long, user_id long"
-        ).parquet(os.path.join(root, "out"))
-        pdf = out.toPandas()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(pdf, schema="click_id long, view_id long, user_id long")
+
+    return _materialized(spark, "sjoin_q_", build)
 
 
 def _q_event_stream_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -311,41 +283,29 @@ def _q_event_stream_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     is COALESCEd to -1 on both engines (a NULL long becomes float64 NaN
     in pandas on one engine and nullable Int64 on the other depending on
     version — -1 keeps the hash comparison in integer space)."""
-    import datetime
-    import shutil
-    import tempfile
-
     from pdfplumber_golang_spark.streaming.join import (
-        stream_interval_join_left,
+        stream_interval_join,
         write_join_barriers,
     )
 
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    root = tempfile.mkdtemp(prefix="sjoinl_q_")
-    try:
+
+    def build(root: str) -> DataFrame:
         in_dir = os.path.join(root, "in")
         ev.repartition(8).write.parquet(in_dir)
-        maxts = ev.agg(F.max("ts")).collect()[0][0]
-        write_join_barriers(spark, in_dir, maxts, watermark_days=45)
-        q = stream_interval_join_left(
-            spark, in_dir, os.path.join(root, "out"), os.path.join(root, "ckpt")
+        write_join_barriers(spark, in_dir, ev.agg(F.max("ts")).collect()[0][0])
+        out = stream_interval_join(
+            spark, in_dir, os.path.join(root, "out"),
+            os.path.join(root, "ckpt"), how="left",
         )
-        q.awaitTermination(600)
-        out = spark.read.schema(
-            "click_id long, view_id long, user_id long"
-        ).parquet(os.path.join(root, "out"))
-        pdf = out.select(
+        return out.select(
             "click_id",
             F.coalesce("view_id", F.lit(-1)).alias("view_id"),
             "user_id",
             F.col("view_id").isNotNull().alias("matched"),
-        ).toPandas()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        pdf,
-        schema="click_id long, view_id long, user_id long, matched boolean",
-    )
+        )
+
+    return _materialized(spark, "sjoinl_q_", build)
 
 
 def _q_extract_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -354,28 +314,17 @@ def _q_extract_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_extract (readStream → the same mapInPandas kernel →
     exactly-once parquet file sink, Trigger.AvailableNow); the sink's
     reassembled text must be byte-identical to the direct-path goldens."""
-    import shutil
-    import tempfile
-
     from pdfplumber_golang_spark.streaming.ingest import stream_extract
 
-    pages = load_or_build_pages(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="stream_q_")
-    try:
+    def build(root: str) -> DataFrame:
         in_dir = os.path.join(root, "in")
-        pages.repartition(16).write.parquet(in_dir)
-        q = stream_extract(
+        load_or_build_pages(spark, sf_dir).repartition(16).write.parquet(in_dir)
+        rows = stream_extract(
             spark, in_dir, os.path.join(root, "out"), os.path.join(root, "ckpt")
         )
-        q.awaitTermination(600)
-        rows = spark.read.schema(pipeline.PAGE_ROWS_SCHEMA).parquet(
-            os.path.join(root, "out")
-        )
-        out = pipeline.doc_text(rows).select("url", "text")
-        pdf = out.toPandas()  # materialize before the temp dir disappears
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(pdf, schema=out.schema)
+        return pipeline.doc_text(rows).select("url", "text")
+
+    return _materialized(spark, "stream_q_", build)
 
 
 def _q_extract_checkpointed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -384,25 +333,19 @@ def _q_extract_checkpointed(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups) driven end-to-end: its materialized output must reassemble to
     the SAME byte-identical goldens as the direct path — the north rule's
     checkpoint/resume machinery under the hash gate, not just pytest."""
-    import shutil
-    import tempfile
-
     from pdfplumber_golang_spark.plans import checkpoint
 
-    pages = load_or_build_pages(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="ckpt_q_")
-    try:
+    def build(root: str) -> DataFrame:
         checkpoint.run_checkpointed(
-            spark, pages, root, n_buckets=8, group_size=4, parallelism=16
+            spark, load_or_build_pages(spark, sf_dir), root,
+            n_buckets=8, group_size=4, parallelism=16,
         )
         rows = spark.read.parquet(os.path.join(root, "pages"))
-        out = pipeline.doc_text(rows.drop("bucket", "group")).select(
+        return pipeline.doc_text(rows.drop("bucket", "group")).select(
             "url", "text"
         )
-        pdf = out.toPandas()  # materialize before the temp dir disappears
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(pdf, schema=out.schema)
+
+    return _materialized(spark, "ckpt_q_", build)
 
 
 def _q_extract_ckpt_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -414,14 +357,11 @@ def _q_extract_ckpt_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lineage that the first group's buckets were NOT recomputed: they
     keep the first run_id, appear exactly once, and the resume reports
     them as already done."""
-    import shutil
-    import tempfile
-
     from pdfplumber_golang_spark.plans import checkpoint
 
     pages = load_or_build_pages(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="ckpt_rsm_")
-    try:
+
+    def build(root: str) -> DataFrame:
         st1 = checkpoint.run_checkpointed(
             spark, pages, root, n_buckets=8, group_size=4, parallelism=16,
             max_groups=1,
@@ -438,13 +378,11 @@ def _q_extract_ckpt_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         # row each, still stamped with the first run_id
         assert len(first) == 4 and lin["bucket"].nunique() == len(lin)
         rows = spark.read.parquet(os.path.join(root, "pages"))
-        out = pipeline.doc_text(rows.drop("bucket", "group")).select(
+        return pipeline.doc_text(rows.drop("bucket", "group")).select(
             "url", "text"
         )
-        pdf = out.toPandas()  # materialize before the temp dir disappears
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(pdf, schema=out.schema)
+
+    return _materialized(spark, "ckpt_rsm_", build)
 
 
 def _q_extract_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -989,32 +927,26 @@ def _q_event_sessions_stateful(spark, sf_dir):
     oracle states that exact set in SQL (lag/cumsum sessionize + LEAD /
     final-watermark predicate). Integer-valued columns only (float sums
     are order-sensitive across engines)."""
-    import shutil
-    import tempfile
-
     from pdfplumber_golang_spark.streaming.sessionize import stream_sessionize
 
-    root = tempfile.mkdtemp(prefix="sessionize_q_")
-    in_dir = os.path.join(root, "in")
-    os.makedirs(in_dir)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts"), "value"
-    )
-    # time-ordered files (the operator's in-order-arrival contract)
-    ev.orderBy("ts").coalesce(1).write.mode("overwrite").parquet(in_dir)
-    try:
-        out = stream_sessionize(spark, in_dir, os.path.join(root, "ckpt"))
-        result = out.select(
+    def build(root: str) -> DataFrame:
+        in_dir = os.path.join(root, "in")
+        ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+            "user_id", F.col("ts").cast("timestamp").alias("ts"), "value"
+        )
+        # time-ordered files (the operator's in-order-arrival contract)
+        ev.orderBy("ts").coalesce(1).write.parquet(in_dir)
+        out = stream_sessionize(
+            spark, in_dir, os.path.join(root, "out"), os.path.join(root, "ckpt")
+        )
+        return out.select(
             F.col("user_id").cast("long").alias("user_id"),
             F.col("session_start").cast("long").alias("session_start"),
             F.col("session_end").cast("long").alias("session_end"),
             F.col("n_events").cast("long").alias("n_events"),
         )
-        # materialize before the temp input dir disappears
-        pdf = result.toPandas()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(pdf, schema=result.schema)
+
+    return _materialized(spark, "sessionize_q_", build)
 
 
 def _q_event_sessions(spark, sf_dir):

@@ -155,8 +155,13 @@ def fixture_table(
 
 
 def pages_cache_path(sf_dir: str) -> str:
+    """<checkout>/.pages_cache/<sf>, in the checkout that holds this
+    package, so two checkouts never share (stale) payloads."""
+    checkout = os.path.dirname(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__)
+    )))
     tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join("/root/repo/.pages_cache", tag)
+    return os.path.join(checkout, ".pages_cache", tag)
 
 
 def load_or_build_pages(spark: SparkSession, sf_dir: str) -> DataFrame:

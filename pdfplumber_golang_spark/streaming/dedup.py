@@ -9,20 +9,18 @@ arriving later than the horizon is the operator's documented miss window
 a retention policy knob, and the md5 key keeps state rows at 16 bytes + url.
 
 The parity test drains the pages table with Trigger.AvailableNow and checks
-the emitted set equals the batch first-occurrence dedup (the fixture's
-duplicates all arrive inside the horizon, so the semantics coincide
-exactly).
+the emitted content-hash set equals the batch first-occurrence dedup's (the
+fixture's duplicates all arrive inside the horizon, so the sets coincide
+exactly; which member of a duplicate group is kept is not checked).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..sources.pagesgen import PAGES_SCHEMA
+from . import drain
 
 WATERMARK = "10 minutes"
 
@@ -32,7 +30,7 @@ def stream_dedup(
     in_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-) -> StreamingQuery:
+) -> DataFrame:
     """Stream page files, keep the first occurrence per content hash."""
     pages = (
         spark.readStream.schema(PAGES_SCHEMA)
@@ -46,13 +44,7 @@ def stream_dedup(
         .withWatermark("warc_ts", WATERMARK)
         .dropDuplicatesWithinWatermark(["h"])
     )
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(deduped, out_dir, checkpoint_dir)
 
 
 def batch_dedup_first(spark: SparkSession, in_dir: str) -> DataFrame:
@@ -81,13 +73,12 @@ def stream_dedup_docs(
     in_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    watermark: str = DOC_WATERMARK,
-) -> StreamingQuery:
+) -> DataFrame:
     """File-stream a (doc_id, ts, text) replay of the documents table and
     keep one row per content hash via ``dropDuplicatesWithinWatermark``,
-    sinking exactly-once to parquet with Trigger.AvailableNow.
+    draining exactly-once to parquet.
 
-    The default horizon covers the whole fixture replay span so the
+    The DOC_WATERMARK horizon covers the whole fixture replay span so the
     emitted hash set equals the batch distinct set EXACTLY (the oracle
     gate's check); in production the horizon is the dedup retention
     policy — state is one 16-byte digest per distinct doc within it."""
@@ -98,13 +89,7 @@ def stream_dedup_docs(
     )
     deduped = (
         docs.select("doc_id", "ts", F.md5("text").alias("h"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", DOC_WATERMARK)
         .dropDuplicatesWithinWatermark(["h"])
     )
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(deduped, out_dir, checkpoint_dir)

@@ -15,8 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
+from . import drain
 from .join import EVENTS_SCHEMA
 
 
@@ -37,12 +37,12 @@ def user_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_enrich(
     spark: SparkSession,
     in_dir: str,
-    dim: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-) -> StreamingQuery:
+    dim: DataFrame,
+) -> DataFrame:
     """File-stream events, inner-join the broadcast static dimension on
-    user_id, sink exactly-once to parquet with Trigger.AvailableNow."""
+    user_id, drain exactly-once to parquet."""
     ev = (
         spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 4)
@@ -52,10 +52,4 @@ def stream_enrich(
     enriched = ev.join(F.broadcast(dim), "user_id").select(
         "event_id", "user_id", "event_type", "segment"
     )
-    return (
-        enriched.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(enriched, out_dir, checkpoint_dir)

@@ -11,13 +11,11 @@ test runs it.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import SparkSession
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql import DataFrame, SparkSession
 
 from .. import pipeline
 from ..sources.pagesgen import PAGES_SCHEMA
+from . import drain
 
 
 def stream_extract(
@@ -25,8 +23,8 @@ def stream_extract(
     in_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-) -> StreamingQuery:
-    """Stream parquet page files from in_dir, extract, sink to parquet.
+) -> DataFrame:
+    """Stream parquet page files from in_dir, extract, drain to parquet.
 
     File-source + file-sink gives exactly-once per input file via the
     streaming checkpoint (offsets + sink metadata log) — the streaming
@@ -36,11 +34,4 @@ def stream_extract(
         .option("maxFilesPerTrigger", 8)
         .parquet(in_dir)
     )
-    rows = pipeline.extract_pages(pages)
-    return (
-        rows.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(pipeline.extract_pages(pages), out_dir, checkpoint_dir)

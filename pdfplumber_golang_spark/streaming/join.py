@@ -4,20 +4,24 @@ two-sided join), alongside the existing windowed aggs, stateful
 sessionize, and watermark dedup.
 
 Each 'click' joins the same user's 'view' events from the preceding
-JOIN_INTERVAL — the canonical attribution query.  Both sides carry
-event-time watermarks, so Spark bounds the join state: a side's rows are
-evicted once the watermark passes ts + interval.  The default horizon
+JOIN_INTERVAL — the canonical attribution query, one band (theta) join
+whether it runs inner or left-outer.  Both sides carry event-time
+watermarks, so Spark bounds the join state: a side's rows are evicted
+once the watermark passes ts + interval.  The JOIN_WATERMARK horizon
 covers the fixture's replay span, making the drained AvailableNow result
-EXACTLY the batch inner join (the oracle's SQL); in production the
-horizon is the attribution window's retention knob, and state is one row
-per in-horizon event per side.
+EXACTLY the batch join (the oracle's SQL); in production the horizon is
+the attribution window's retention knob, and state is one row per
+in-horizon event per side.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import datetime
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+
+from . import drain
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string,"
@@ -33,16 +37,30 @@ def stream_interval_join(
     in_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    interval: str = JOIN_INTERVAL,
-    watermark: str = JOIN_WATERMARK,
-) -> StreamingQuery:
-    """File-stream the events table twice (clicks side, views side),
-    inner-join on user with the view inside the click's look-back
-    interval, sink exactly-once to parquet with Trigger.AvailableNow."""
+    how: str = "inner",
+) -> DataFrame:
+    """File-stream the events table twice (clicks side, views side), join
+    on user with the view inside the click's look-back interval, drain
+    exactly-once to parquet.
+
+    ``how`` is "inner" or "left".  The left-outer form (VERDICT r4 #7)
+    also emits each click with no attributable view, with a NULL view_id,
+    once the watermark passes its horizon.  State and eviction are the
+    same as the inner form; the only addition is the null emission on
+    eviction.  Emission timing makes its drain subtle: see
+    write_join_barriers — the input must end with punctuation files or an
+    AvailableNow run terminates before acting on its final watermark and
+    silently degrades to the inner join."""
+    if how not in ("inner", "left"):
+        raise ValueError(f"how must be 'inner' or 'left', not {how!r}")
+    # left: one file per micro-batch keeps each barrier in its own batch
+    # (two barriers in one batch would again leave the advance un-acted-on)
+    max_files = 1 if how == "left" else 4
+
     def side(event_type: str, prefix: str):
         return (
             spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 4)
+            .option("maxFilesPerTrigger", max_files)
             .parquet(in_dir)
             .where(F.col("event_type") == event_type)
             .select(
@@ -50,35 +68,24 @@ def stream_interval_join(
                 F.col("user_id").alias(f"{prefix}_user"),
                 F.col("ts").alias(f"{prefix}_ts"),
             )
-            .withWatermark(f"{prefix}_ts", watermark)
+            .withWatermark(f"{prefix}_ts", JOIN_WATERMARK)
         )
 
-    clicks = side("click", "click")
-    views = side("view", "view")
-    joined = clicks.join(
-        views,
+    joined = side("click", "click").join(
+        side("view", "view"),
         (F.col("click_user") == F.col("view_user"))
-        & (F.col("view_ts") >= F.expr(f"click_ts - interval {interval}"))
+        & (F.col("view_ts") >= F.expr(f"click_ts - interval {JOIN_INTERVAL}"))
         & (F.col("view_ts") <= F.col("click_ts")),
+        how,
     ).select(
         "click_id", "view_id",
         F.col("click_user").alias("user_id"),
     )
-    return (
-        joined.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(joined, out_dir, checkpoint_dir)
 
 
-LOJ_MAX_FILES_PER_TRIGGER = 1
-
-
-def write_join_barriers(spark, in_dir: str, base_ts, watermark_days: int,
-                        n: int = 2) -> None:
-    """Append ``n`` barrier files that let an AvailableNow drain emit the
+def write_join_barriers(spark, in_dir: str, base_ts) -> None:
+    """Append two barrier files that let an AvailableNow drain emit the
     LEFT-outer join's unmatched rows.
 
     Structured Streaming evicts (and null-emits) outer state only when
@@ -98,69 +105,11 @@ def write_join_barriers(spark, in_dir: str, base_ts, watermark_days: int,
     type) so they join nothing real and never each other; and their
     timestamps must sit beyond watermark + interval so the barrier click
     itself is never evicted into the output."""
-    import datetime
-
-    sch = EVENTS_SCHEMA
-    for i in range(n):
+    watermark_days = int(JOIN_WATERMARK.split()[0])
+    for i in range(2):
         ts = base_ts + datetime.timedelta(days=watermark_days + 1 + i)
         spark.createDataFrame(
             [(-1 - 2 * i, ts, -1, "click", 0.0, ""),
              (-2 - 2 * i, ts, -2, "view", 0.0, "")],
-            sch,
+            EVENTS_SCHEMA,
         ).coalesce(1).write.mode("append").parquet(in_dir)
-
-
-def stream_interval_join_left(
-    spark: SparkSession,
-    in_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    interval: str = JOIN_INTERVAL,
-    watermark: str = JOIN_WATERMARK,
-) -> StreamingQuery:
-    """LEFT-outer twin of stream_interval_join — the remaining
-    Structured Streaming operator class (VERDICT r4 #7): clicks with no
-    attributable view are emitted with a NULL view_id once the watermark
-    passes their horizon, instead of being dropped.
-
-    State and eviction are identical to the inner form (two watermarked
-    sides, interval-bounded buffer); the ONLY behavioral addition is the
-    null emission on eviction.  Emission timing makes the drain subtle:
-    see write_join_barriers — the input must end with punctuation files
-    or an AvailableNow run terminates before acting on its final
-    watermark and silently degrades to the inner join.
-    maxFilesPerTrigger=1 keeps each barrier in its own micro-batch (two
-    barriers in one batch would again leave the advance un-acted-on)."""
-    def side(event_type: str, prefix: str):
-        return (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", LOJ_MAX_FILES_PER_TRIGGER)
-            .parquet(in_dir)
-            .where(F.col("event_type") == event_type)
-            .select(
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("user_id").alias(f"{prefix}_user"),
-                F.col("ts").alias(f"{prefix}_ts"),
-            )
-            .withWatermark(f"{prefix}_ts", watermark)
-        )
-
-    clicks = side("click", "click")
-    views = side("view", "view")
-    joined = clicks.join(
-        views,
-        (F.col("click_user") == F.col("view_user"))
-        & (F.col("view_ts") >= F.expr(f"click_ts - interval {interval}"))
-        & (F.col("view_ts") <= F.col("click_ts")),
-        "leftOuter",
-    ).select(
-        "click_id", "view_id",
-        F.col("click_user").alias("user_id"),
-    )
-    return (
-        joined.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

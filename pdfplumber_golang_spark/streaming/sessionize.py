@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import drain
+
 GAP_SECONDS = 1800
 WATERMARK = "30 minutes"
 
@@ -100,10 +102,10 @@ def _sessionize_group(key, pdfs, state):
 
 
 def stream_sessionize(
-    spark: SparkSession, in_dir: str, checkpoint_dir: str
+    spark: SparkSession, in_dir: str, out_dir: str, checkpoint_dir: str
 ) -> DataFrame:
-    """File-source stream → watermark → applyInPandasWithState sessionize
-    → memory sink; drains with AvailableNow and returns emitted sessions."""
+    """File-source stream → watermark → applyInPandasWithState sessionize,
+    drained exactly-once to parquet; returns the emitted sessions."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     ev_schema = spark.read.parquet(in_dir).schema
@@ -122,17 +124,4 @@ def stream_sessionize(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("stream_sessions")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        # never read a partially-drained memory table; stop the query so
-        # the fixed queryName does not leak into the next run either
-        q.stop()
-        raise TimeoutError("stream_sessionize drain exceeded 600s")
-    return spark.table("stream_sessions")
+    return drain(sessions, out_dir, checkpoint_dir)

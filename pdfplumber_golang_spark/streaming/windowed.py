@@ -14,13 +14,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import drain
+
 WINDOW = "5 minutes"
 WATERMARK = "1 minute"
 
 
-def windowed_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch: events per (5-minute tumbling window, event_type)."""
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+def _counts(ev: DataFrame) -> DataFrame:
+    """Events per (5-minute tumbling window, event_type): the one
+    aggregation both twins run."""
     return (
         ev.groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
         .agg(
@@ -36,6 +38,11 @@ def windowed_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def windowed_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch twin, read from the events table."""
+    return _counts(spark.read.parquet(os.path.join(sf_dir, "events.parquet")))
+
+
 def windowed_event_counts_oracle() -> str:
     return """
 SELECT time_bucket(INTERVAL 5 MINUTE, ts) AS window_start,
@@ -47,10 +54,10 @@ FROM events GROUP BY window_start, event_type
 
 
 def stream_windowed_event_counts(
-    spark: SparkSession, in_dir: str, checkpoint_dir: str
+    spark: SparkSession, in_dir: str, out_dir: str, checkpoint_dir: str
 ) -> DataFrame:
-    """Streaming twin: file-source → watermark → windowed agg → memory sink
-    (complete mode); drains with AvailableNow and returns the result table."""
+    """Streaming twin: file-source → watermark → windowed agg, drained in
+    complete mode (to a memory table; ``out_dir`` is unused)."""
     ev_schema = spark.read.parquet(in_dir).schema
     stream = (
         spark.readStream.schema(ev_schema)
@@ -60,28 +67,4 @@ def stream_windowed_event_counts(
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", WATERMARK)
     )
-    agg = (
-        stream.groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.round(F.sum("value"), 3).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("windowed_events")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("stream_windowed_event_counts drain exceeded 600s")
-    return spark.table("windowed_events")
+    return drain(_counts(stream), out_dir, checkpoint_dir, "complete")

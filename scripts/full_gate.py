@@ -82,10 +82,10 @@ def main() -> int:
     for name in keys:
         row = {"rows_match": False, "schema_match": False,
                "hash_match": False, "spark_rows": None,
-               "oracle_rows": None, "err": None}
+               "oracle_rows": None, "spark_hash": None, "err": None}
         try:
             s = qs[name](spark, args.sf).toPandas()
-            row["spark_rows"] = len(s)
+            row["spark_rows"], row["spark_hash"] = len(s), vhash(s)
             if name not in oracles:
                 row.update(rows_match=len(s) >= 0, schema_match=True,
                            hash_match=True, oracle_rows=None,
@@ -97,7 +97,7 @@ def main() -> int:
                 row["schema_match"] = sorted(s.columns) == sorted(o.columns)
                 row["hash_match"] = (
                     row["rows_match"] and row["schema_match"]
-                    and vhash(s) == vhash(o)
+                    and row["spark_hash"] == vhash(o)
                 )
         except Exception as e:  # noqa: BLE001 — board must record, not die
             row["err"] = f"{type(e).__name__}: {e}"[:300]
@@ -106,7 +106,7 @@ def main() -> int:
         if not ok:
             failed.append(name)
         print(f"{name:40s} {row['spark_rows']} {row['oracle_rows']} "
-              f"{'MATCH' if ok else 'MISMATCH'}", flush=True)
+              f"{row['spark_hash']} {'MATCH' if ok else 'MISMATCH'}", flush=True)
 
     spark.stop()
     n_ok = sum(1 for r in board.values() if r["hash_match"])

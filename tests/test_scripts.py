@@ -81,3 +81,22 @@ def test_run_extract_script(spark, tmp_path):
     from pdfplumber_golang_spark.plans import checkpoint
 
     assert checkpoint.read_output(spark, out_dir).select("url").distinct().count() == 60
+
+
+def test_pages_cache_follows_checkout(tmp_path):
+    """The pages cache lives in the checkout that holds the imported
+    package: a copy of the package never reads this checkout's cache."""
+    shutil.copytree(
+        os.path.join(REPO, "pdfplumber_golang_spark"),
+        tmp_path / "pdfplumber_golang_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "from pdfplumber_golang_spark.sources.pagesgen import pages_cache_path;"
+         "print(pages_cache_path('/data/sf0.001'))"],
+        capture_output=True, text=True, cwd=tmp_path, check=True,
+        env={**os.environ, "PYTHONPATH": str(tmp_path)},
+    )
+    path = out.stdout.strip()
+    assert path == os.path.join(str(tmp_path), ".pages_cache", "sf0.001")

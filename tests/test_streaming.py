@@ -26,18 +26,14 @@ def test_stream_matches_batch(spark, dirs):
     pages = load_or_build_pages(spark, SF_DIR).limit(120).cache()
     pages.write.mode("overwrite").parquet(dirs["in"])
 
-    q = stream_extract(spark, dirs["in"], dirs["out"], dirs["ckpt"])
-    q.awaitTermination(120)
-
-    streamed = spark.read.parquet(dirs["out"])
+    streamed = stream_extract(spark, dirs["in"], dirs["out"], dirs["ckpt"])
     batch = pipeline.extract_pages(pages, parallelism=8)
     s = {(r.url, r.page_no): r.text for r in streamed.collect()}
     b = {(r.url, r.page_no): r.text for r in batch.collect()}
     assert s == b
 
     # restart with no new files: exactly-once, no duplicate outputs
-    q2 = stream_extract(spark, dirs["in"], dirs["out"], dirs["ckpt"])
-    q2.awaitTermination(60)
+    stream_extract(spark, dirs["in"], dirs["out"], dirs["ckpt"])
     assert spark.read.parquet(dirs["out"]).count() == len(s)
 
 
@@ -51,7 +47,9 @@ def test_windowed_agg_stream_matches_batch(spark, dirs):
 
     os.makedirs(dirs["in"], exist_ok=True)
     sh.copy(f"{SF_DIR}/events.parquet", os.path.join(dirs["in"], "part-0.parquet"))
-    streamed = stream_windowed_event_counts(spark, dirs["in"], dirs["ckpt"]).toPandas()
+    streamed = stream_windowed_event_counts(
+        spark, dirs["in"], dirs["out"], dirs["ckpt"]
+    ).toPandas()
     batch = windowed_event_counts(spark, SF_DIR).toPandas()
     key = ["window_start", "event_type"]
     s = streamed.sort_values(key).reset_index(drop=True)
@@ -88,7 +86,9 @@ def test_stateful_sessionize_stream_matches_batch(spark, dirs):
             coerce_timestamps="us", allow_truncated_timestamps=True,
         )
 
-    streamed = stream_sessionize(spark, dirs["in"], dirs["ckpt"]).toPandas()
+    streamed = stream_sessionize(
+        spark, dirs["in"], dirs["out"], dirs["ckpt"]
+    ).toPandas()
 
     # batch truth: same fold in pandas
     sessions = []
@@ -143,11 +143,9 @@ def test_stream_dedup_matches_batch_first_occurrence(spark, tmp_path):
         )
     )
     pages.unionByName(dups).repartition(8).write.parquet(in_dir)
-    q = SD.stream_dedup(
+    got = SD.stream_dedup(
         spark, in_dir, str(tmp_path / "out"), str(tmp_path / "ckpt")
     )
-    q.awaitTermination(300)
-    got = spark.read.parquet(str(tmp_path / "out"))
     want = SD.batch_dedup_first(spark, in_dir)
     # one row per distinct content hash
     n_hashes = got.select("h").distinct().count()
@@ -171,13 +169,9 @@ def test_stream_interval_join_matches_batch(spark, tmp_path):
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     in_dir = str(tmp_path / "in")
     ev.repartition(8).write.parquet(in_dir)
-    q = stream_interval_join(
+    got = stream_interval_join(
         spark, in_dir, str(tmp_path / "out"), str(tmp_path / "ckpt")
     )
-    q.awaitTermination(300)
-    got = spark.read.schema(
-        "click_id long, view_id long, user_id long"
-    ).parquet(str(tmp_path / "out"))
     c = ev.where("event_type = 'click'").select(
         F.col("event_id").alias("click_id"), F.col("user_id").alias("cu"),
         F.col("ts").alias("cts"),
@@ -207,13 +201,9 @@ def test_stream_enrich_matches_batch(spark, tmp_path):
     in_dir = str(tmp_path / "in")
     ev.repartition(8).write.parquet(in_dir)
     dim = user_dim(spark, SF)
-    q = stream_enrich(
-        spark, in_dir, dim, str(tmp_path / "out"), str(tmp_path / "ckpt")
+    got = stream_enrich(
+        spark, in_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"), dim
     )
-    q.awaitTermination(300)
-    got = spark.read.schema(
-        "event_id long, user_id long, event_type string, segment string"
-    ).parquet(str(tmp_path / "out"))
     want = ev.select("event_id", "user_id", "event_type").join(
         dim, "user_id"
     ).select("event_id", "user_id", "event_type", "segment")
@@ -230,7 +220,7 @@ def test_stream_left_interval_join_emits_unmatched(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from pdfplumber_golang_spark.streaming.join import (
-        stream_interval_join_left,
+        stream_interval_join,
         write_join_barriers,
     )
 
@@ -239,14 +229,11 @@ def test_stream_left_interval_join_emits_unmatched(spark, tmp_path):
     in_dir = str(tmp_path / "in")
     ev.repartition(8).write.parquet(in_dir)
     maxts = ev.agg(F.max("ts")).collect()[0][0]
-    write_join_barriers(spark, in_dir, maxts, watermark_days=45)
-    q = stream_interval_join_left(
-        spark, in_dir, str(tmp_path / "out"), str(tmp_path / "ckpt")
+    write_join_barriers(spark, in_dir, maxts)
+    got = stream_interval_join(
+        spark, in_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        how="left",
     )
-    q.awaitTermination(300)
-    got = spark.read.schema(
-        "click_id long, view_id long, user_id long"
-    ).parquet(str(tmp_path / "out"))
     c = ev.where("event_type = 'click'").select(
         F.col("event_id").alias("click_id"),
         F.col("user_id").alias("cu"),
@@ -269,3 +256,37 @@ def test_stream_left_interval_join_emits_unmatched(spark, tmp_path):
     assert got.count() == want.count()
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
+
+
+def test_drain_timeout_stops_query(spark, tmp_path, monkeypatch):
+    """A drain that outlasts its bound raises TimeoutError and leaves no
+    query running (so no caller reads a half-drained sink)."""
+    from pdfplumber_golang_spark import streaming
+    from pdfplumber_golang_spark.streaming.join import EVENTS_SCHEMA
+
+    in_dir = str(tmp_path / "in")
+    spark.read.parquet(f"{SF_DIR}/events.parquet").write.parquet(in_dir)
+    monkeypatch.setattr(streaming, "DRAIN_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError):
+        streaming.drain(
+            spark.readStream.schema(EVENTS_SCHEMA).parquet(in_dir),
+            str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        )
+    assert spark.streams.active == []
+
+
+def test_materialized_failed_build_leaves_no_dir():
+    """A build that raises inside __spark_entry__._materialized propagates
+    its error and its scratch dir is removed (no Spark needed)."""
+    import __spark_entry__ as E
+
+    seen = []
+
+    def build(root):
+        seen.append(root)
+        open(os.path.join(root, "partial"), "w").close()
+        raise RuntimeError("write failed")
+
+    with pytest.raises(RuntimeError, match="write failed"):
+        E._materialized(None, "mat_test_", build)
+    assert len(seen) == 1 and not os.path.exists(seen[0])
