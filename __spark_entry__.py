@@ -55,8 +55,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction (PDF parse + HTML strip) on sf0.001."""
     _ensure_shipped(spark)
     pages = load_or_build_pages(spark, "/root/testdata/sf0.001")
-    page_rows = pipeline.extract_pages(pages)
-    return pipeline.doc_text(page_rows)
+    return pipeline.doc_text(pipeline.extract_pages(pages))
 
 
 # --------------------------------------------------------------- queries ---
@@ -398,14 +397,8 @@ def _q_page_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = load_or_build_pages(spark, sf_dir).where(
         F.col("variant").startswith("pdf_")
     )
-    rows = pipeline.extract_pages(pages)
-    return (
-        rows.where(F.col("error").isNull())
-        .groupBy("url")
-        .agg(
-            F.count("*").cast("long").alias("n_pages"),
-            F.sum("n_chars").cast("long").alias("n_chars"),
-        )
+    return pipeline.doc_text(pipeline.extract_pages(pages)).select(
+        "url", "n_pages", "n_chars"
     )
 
 

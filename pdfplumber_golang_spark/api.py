@@ -318,7 +318,3 @@ def open_bytes(raw: bytes, password: bytes = b"") -> Document:
     page.extract_text = lambda **_: text  # type: ignore[method-assign]
     return Document([page], {}, "html")
 
-
-def open_path(path: str) -> Document:
-    with open(path, "rb") as f:
-        return open_bytes(f.read())

@@ -386,7 +386,11 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The persisted result keeps hash(shingle) partitioning, so the
     # self-join below adds no exchange; sh still feeds three consumers
     # (sizes + both join sides) — the persist stays.  At cluster scale
-    # this would be a parquet checkpoint instead.
+    # this would be a parquet checkpoint instead.  Skew caveat: the window
+    # has no map-side partial count and buffers each shingle's whole group
+    # in one task, and the hot shingles the cap drops are the largest
+    # groups; at cluster scale a two-pass groupBy df-filter (combinable
+    # count, then a join back) is the skew-robust variant.
     sh = cache.persist(
         sh.withColumn("df", F.count("*").over(Window.partitionBy("shingle")))
         .where(F.col("df") <= cap)

@@ -512,6 +512,9 @@ LEFT JOIN scored s ON s.doc_id = d.doc_id
 
 BPE_MERGES = 6       # learned merge rounds (unrolled in the oracle SQL)
 _BPE_SEP = "\x1f"    # unit separator — never appears in corpus text
+#: bound on the word histogram BPE training collects to the driver; a
+#: larger vocabulary fails loudly instead of exhausting driver memory
+BPE_VOCAB_MAX = 1 << 20
 
 
 def _bpe_merge_expr(syms_col, left: str, right: str):
@@ -578,14 +581,14 @@ def _bpe_learn(spark: SparkSession, sf_dir: str):
     word histogram (one combinable explode+groupBy job); the vocabulary
     it produces is Heaps-law bounded (grows ~polylog/sublinear in the
     corpus, NOT with it), so it comes to the driver ONCE as bounded
-    control state — the same sanctioned pattern as ``lsh_params``/
-    ``df_cap``, just vector-valued — and every merge round runs locally
-    over it.  The old shape launched 2 Spark jobs per round (a
+    control state (at most BPE_VOCAB_MAX words, else a RuntimeError) —
+    the same sanctioned pattern as ``lsh_params``/``df_cap``, just
+    vector-valued — and every merge round runs locally over it.  The old shape launched 2 Spark jobs per round (a
     vocab-sized pair count + a one-row argmax collect), which at a
     production 32k-merge vocabulary means ~64k sequential jobs of pure
     scheduler overhead; now the round loop is driver-local and the job
-    count is ONE regardless of BPE_MERGES (pinned by
-    tests/test_training_ops.py::test_bpe_single_corpus_job).
+    count does not depend on BPE_MERGES (pinned by
+    tests/test_training_ops.py::test_bpe_job_count_independent_of_merge_rounds).
 
     Semantics are unchanged and pinned three ways: the argmax total
     order (freq DESC, left ASC, right ASC — Python tuple compare on
@@ -593,7 +596,9 @@ def _bpe_learn(spark: SparkSession, sf_dir: str):
     preserves code-point order), the greedy fold (``_merge_syms`` is the
     Python twin of ``_bpe_merge_expr``), the unrolled-SQL oracle, and
     the in-memory reference pytest."""
-    rows = _bpe_word_seqs(spark, sf_dir).collect()
+    rows = _bpe_word_seqs(spark, sf_dir).limit(BPE_VOCAB_MAX + 1).collect()
+    if len(rows) > BPE_VOCAB_MAX:
+        raise RuntimeError(f"BPE vocabulary over BPE_VOCAB_MAX={BPE_VOCAB_MAX}")
     vocab = [(r["word"], int(r["freq"]), list(r["syms"])) for r in rows]
     merges = []
     for rank in range(1, BPE_MERGES + 1):

@@ -21,12 +21,8 @@ from __future__ import annotations
 from . import lexer as lx
 from .cmap import CMap
 
+#: reference em widths, 0.5 for other chars (content_stream_parser.go:1244-1257)
 _WIDTHS = {" ": 0.25, **{c: 0.3 for c in "ilI!.,;:'\""}, **{c: 0.8 for c in "mMWw"}}
-
-
-def char_width_factor(ch: str) -> float:
-    """Reference heuristic width in em (content_stream_parser.go:1244-1257)."""
-    return _WIDTHS.get(ch, 0.5)
 
 
 class Font:

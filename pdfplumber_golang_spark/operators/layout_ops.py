@@ -117,23 +117,6 @@ def lines(chars: DataFrame, x_tol: float = spec.X_TOLERANCE) -> DataFrame:
     )
 
 
-def page_text(chars: DataFrame) -> DataFrame:
-    """Y7: '\n'-join line texts in line_id order per page."""
-    return (
-        lines(chars)
-        .groupBy("url", "page_no")
-        .agg(
-            F.concat_ws(
-                "\n",
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("line_id", "line_text"))),
-                    lambda s: s["line_text"],
-                ),
-            ).alias("text")
-        )
-    )
-
-
 def doc_text_from_chars(chars: DataFrame) -> DataFrame:
     """Whole-document text: pages joined by '\n' in page order.
 

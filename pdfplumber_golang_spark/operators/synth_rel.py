@@ -120,11 +120,6 @@ GRID_X0, GRID_Y0 = 72.0, 400.0
 GRID_CELL_W, GRID_CELL_H = 40.0, 24.0
 
 
-def _grid_dims():
-    """rows = 3 + doc_id % 3, cols = 3 + doc_id % 2 — as SQL fragments."""
-    return "3 + doc_id % 3", "3 + doc_id % 2"
-
-
 def edges_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthetic edges: ruling grid per doc, horizontals split into two
     touching halves, every segment duplicated (url, page_no, x0,y0,x1,y1,

@@ -28,8 +28,10 @@ Spark-first design (SURVEY §3.2 "Spark shape"):
     threshold``) so one hot partition can't stall the stage (north_rule
     skew requirement) — docs are atomic units so salting spreads
     *documents*, pages explode afterwards;
-  * per-doc text reassembly is a groupBy over (url), shuffle keyed the same
-    way as the repartition so AQE can coalesce.
+  * per-doc text: ``doc_text`` of the unpersisted frame ``extract_pages``
+    returned is that same one stage, emitting doc rows (one per pages row,
+    so a duplicated url gives two); other page rows, which no longer carry
+    their payloads, are reassembled by a groupBy over url.
 """
 
 from __future__ import annotations
@@ -148,6 +150,12 @@ EDGE_ROWS_SCHEMA = T.StructType(
     ]
 )
 
+#: doc_text's columns, nullable as its groupBy builds them
+DOC_TEXT_SCHEMA = (
+    T.StructType().add("url", "string").add("text", "string", False)
+    .add("n_chars", "long").add("n_words", "long").add("n_pages", "long", False)
+)
+
 METADATA_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
@@ -245,7 +253,9 @@ def extract_pages(
         pages = pages.select("url", "html").repartition(
             parallelism, F.xxhash64("url"), salt_col
         )
-    return relation(pages, _page_rows, PAGE_ROWS_SCHEMA)
+    rows = relation(pages, _page_rows, PAGE_ROWS_SCHEMA)
+    rows._extracted_from = pages  # doc_text's one-stage path
+    return rows
 
 
 def _char_rows(url: str, raw: bytes) -> Iterator[tuple]:
@@ -346,12 +356,28 @@ def extract_metadata_df(pages: DataFrame) -> DataFrame:
     return relation(pages, _metadata_rows, METADATA_SCHEMA)
 
 
+def _doc_rows(url: str, raw: bytes) -> Iterator[tuple]:
+    """The row ``doc_text``'s groupBy builds from this doc's page rows."""
+    pages, _err = extract_document(url, raw)
+    if pages:
+        pages.sort(key=lambda p: (p.page_no, p.text))
+        yield (url, "\n".join(p.text for p in pages), sum(p.n_chars for p in pages),
+               sum(p.n_words for p in pages), len(pages))
+
+
 def doc_text(page_rows: DataFrame) -> DataFrame:
     """Per-doc extracted text: pages '\n'-joined in page order.
 
-    sort_array over (page_no, text) structs keeps the agg shuffle-free of
-    window functions; one groupBy shuffle keyed by url.
+    The unpersisted frame ``extract_pages`` returned takes one stage, with
+    no aggregate and no exchange: its payloads run through ``_doc_rows``,
+    one doc row per pages row, so a url twice in the pages table gives two
+    rows where the groupBy would merge them. Any other page rows (read
+    back, filtered, projected or persisted) are grouped by url; sort_array
+    over (page_no, text) structs keeps the agg free of window functions.
     """
+    pages = vars(page_rows).get("_extracted_from")
+    if pages is not None and not page_rows.is_cached:
+        return relation(pages, _doc_rows, DOC_TEXT_SCHEMA)
     return (
         page_rows.where(F.col("error").isNull())
         .groupBy("url")

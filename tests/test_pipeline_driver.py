@@ -1,9 +1,10 @@
 """The per-document driver of ``pipeline`` over plain pandas batches.
 
-No JVM: each relation's emitter, and each media, page-render and WARC
-emitter, runs through ``pipeline.per_doc`` exactly as ``mapInPandas``
-would call it, and the batches it yields are checked against the stage's
-schema with the Arrow conversion Spark applies."""
+Each relation's emitter, and each media, page-render and WARC emitter,
+runs through ``pipeline.per_doc`` exactly as ``mapInPandas`` would call
+it, without a JVM, and the batches it yields are checked against the
+stage's schema with the Arrow conversion Spark applies. The last tests
+run ``doc_text``'s one-stage path in Spark against its groupBy path."""
 
 import datetime
 import functools
@@ -215,3 +216,36 @@ def test_driver_drops_zip_finders_each_task(zip_package):
     emit, schema, pdf = RELATIONS["pages"]
     _drive(emit, schema, pd.DataFrame({"url": ["good"], "html": [pdf]}))
     assert _zip_finders() == []
+
+
+def _pages_table(spark, rows):
+    return spark.createDataFrame(rows, "url string, html binary")
+
+
+def test_one_stage_doc_text_matches_groupby(spark):
+    """``doc_text(extract_pages(t))`` runs as one stage; ``select("*")``
+    makes a new frame, which takes the groupBy over page rows."""
+    multi, _golden = build_pdf(5, " ".join(["alpha beta gamma delta"] * 200), "pdf_plain")
+    t = _pages_table(spark, [
+        ("multi", multi), ("one", _pdf("pdf_plain")), ("html", HTML),
+        ("empty", b"<html><body></body></html>"), ("junk", JUNK),
+    ])
+    one = pipeline.doc_text(pipeline.extract_pages(t))
+    grouped = pipeline.doc_text(pipeline.extract_pages(t).select("*"))
+    assert one.schema == grouped.schema == pipeline.DOC_TEXT_SCHEMA
+    got, want = sorted(one.collect()), sorted(grouped.collect())
+    assert got == want
+    assert [r["url"] for r in got] == ["empty", "html", "multi", "one"]
+    assert got[2]["n_pages"] == 2 and got[0]["text"] == ""
+
+
+def test_one_stage_doc_text_keeps_duplicate_urls_apart(spark):
+    """The documented edge case: a url twice in the pages table gives one
+    doc row per pages row, where the groupBy would merge them."""
+    a = b"<html><body><p>first body</p></body></html>"
+    b = b"<html><body><p>second body text</p></body></html>"
+    t = _pages_table(spark, [("dup", a), ("dup", b)])
+    rows = pipeline.doc_text(pipeline.extract_pages(t)).collect()
+    assert sorted((r["text"], r["n_pages"]) for r in rows) == [
+        ("first body", 1), ("second body text", 1)
+    ]

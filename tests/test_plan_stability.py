@@ -145,6 +145,28 @@ def test_salted_extraction_exchanges_on_url_hash(spark):
     assert "xxhash64" not in plain, plain
 
 
+def test_doc_text_of_extract_pages_is_one_stage(spark):
+    """Pages to doc text is one mapInPandas with no aggregate and no
+    exchange; once the page rows are persisted, doc_text reads them back
+    through the groupBy and gives the same rows."""
+    from pdfplumber_golang_spark import pipeline
+    from pdfplumber_golang_spark.sources.pagesgen import load_or_build_pages
+
+    rows = pipeline.extract_pages(load_or_build_pages(spark, SF_DIR))
+    one = pipeline.doc_text(rows)
+    plan = _executed_plan(one)
+    assert "MapInPandas" in plan, plan
+    assert "Exchange" not in plan and "Aggregate" not in plan, plan
+    want = sorted(one.collect())
+    rows.persist()
+    try:
+        grouped = pipeline.doc_text(rows)
+        assert "Aggregate" in _executed_plan(grouped)
+        assert sorted(grouped.collect()) == want
+    finally:
+        rows.unpersist()
+
+
 def test_tpch_dimension_joins_are_broadcast(spark):
     """Q3/Q5 must broadcast every dimension side (customer / nation /
     region / supplier) — a shuffled dim join at 100 TB fact scale is the

@@ -759,6 +759,16 @@ def test_bpe_job_count_independent_of_merge_rounds(spark, monkeypatch):
     assert a == b, (a, b)  # job count must not scale with merge rounds
 
 
+def test_bpe_vocab_collect_is_bounded(spark, monkeypatch):
+    """The word histogram comes to the driver only up to BPE_VOCAB_MAX
+    words; a larger vocabulary (sf0.001 has 31 words) fails loudly."""
+    from pdfplumber_golang_spark.functions import text_analysis as TA
+
+    monkeypatch.setattr(TA, "BPE_VOCAB_MAX", 30)
+    with pytest.raises(RuntimeError, match="BPE_VOCAB_MAX=30"):
+        TA._bpe_learn(spark, SF_DIR)
+
+
 def test_bpe_python_merge_twin_matches_sql_fold(spark):
     """_merge_syms (the driver-local greedy fold) must stay bit-equal to
     _bpe_merge_expr (the JVM fold the unrolled oracle SQL restates) on
