@@ -339,7 +339,7 @@ def _q_extract_checkpointed(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, load_or_build_pages(spark, sf_dir), root,
             n_buckets=8, group_size=4, parallelism=16,
         )
-        rows = spark.read.parquet(os.path.join(root, "pages"))
+        rows = checkpoint.read_output(spark, root)
         return pipeline.doc_text(rows.drop("bucket", "group")).select(
             "url", "text"
         )
@@ -376,7 +376,7 @@ def _q_extract_ckpt_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the crashed run's buckets survive resume untouched: one lineage
         # row each, still stamped with the first run_id
         assert len(first) == 4 and lin["bucket"].nunique() == len(lin)
-        rows = spark.read.parquet(os.path.join(root, "pages"))
+        rows = checkpoint.read_output(spark, root)
         return pipeline.doc_text(rows.drop("bucket", "group")).select(
             "url", "text"
         )
@@ -970,8 +970,7 @@ def _q_event_sessions(spark, sf_dir):
 
 
 def _q_events_windowed(spark, sf_dir):
-    """Event-time tumbling-window aggregation (batch twin of the
-    Structured Streaming path in streaming/windowed.py)."""
+    """Event-time tumbling-window aggregation (streaming/windowed.py)."""
     from pdfplumber_golang_spark.streaming.windowed import windowed_event_counts
 
     return windowed_event_counts(spark, sf_dir)

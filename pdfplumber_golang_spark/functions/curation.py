@@ -472,9 +472,8 @@ def crawl_host_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl-rate accounting over the input_hint table shape: docs and
     payload bytes per (host, 1-hour tumbling warc_ts window) — the stats a
     politeness scheduler and an ingest monitor read.  Pure JVM windowed
-    agg on the pages table (url, warc_ts, html); the same shape runs as a
-    Structured Streaming query with a watermark (streaming/windowed.py
-    demonstrates the twin on events)."""
+    agg on the pages table (url, warc_ts, html), the same shape as
+    streaming/windowed.py runs on events."""
     from ..sources.pagesgen import load_or_build_pages
 
     pages = load_or_build_pages(spark, sf_dir).select(

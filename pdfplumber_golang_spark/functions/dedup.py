@@ -466,13 +466,16 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     the missing last stage of a dedup pipeline (pairs → clusters → one
     representative per cluster).
 
-    Each iteration is one groupBy over the edge list (label = min(own,
-    neighbors')); dup clusters have tiny diameter (exact copy + near
-    copies of one original), so CC_MAX_ITERS bounds the loop and the
-    final pass asserts a fixpoint was reached (fails loudly otherwise
-    rather than emitting half-merged clusters).  At 10^12 docs this is
-    the standard alternating min-label/small-star shape: edges carry two
-    longs, labels one long — no payload ever shuffles."""
+    Each step is one groupBy over the edge list (label = min(own,
+    neighbors')), persisted, and counts the labels it lowered; the loop
+    stops at the first step that lowers none, so the rounds follow the
+    cluster diameter.  Dup clusters have tiny diameter (exact copy + near
+    copies of one original), so CC_MAX_ITERS bounds the loop: if every
+    step's change count is still nonzero after CC_MAX_ITERS rounds plus
+    one check, it fails loudly rather than emitting half-merged clusters.
+    At 10^12 docs this is the standard alternating min-label/small-star
+    shape: edges carry two longs, labels one long — no payload ever
+    shuffles."""
     c = dup_corpus(spark, sf_dir).select("doc_id")
     # persist the candidate pairs BEFORE the union: both undirected
     # branches reference the same (expensive) MinHash-LSH subtree, and
@@ -492,7 +495,9 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("doc_id").cast("long").alias("label"),
     )
-    for _ in range(CC_MAX_ITERS):
+
+    def step(labels: DataFrame) -> DataFrame:
+        """One min-label round; ``lowered`` marks the labels it changed."""
         nbr = (
             edges.join(
                 labels.select(
@@ -504,39 +509,24 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("src").alias("doc_id"))
             .agg(F.min("nbr_label").alias("nbr_min"))
         )
-        labels = cache.persist(
-            labels.join(nbr, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    "label", F.coalesce("nbr_min", F.col("label"))
-                ).alias("label"),
-            )
-        )
-    # fixpoint assertion: one more propagation step must change nothing
-    nbr = (
-        edges.join(
-            labels.select(
-                F.col("doc_id").alias("dst"), F.col("label").alias("nbr_label")
+        return labels.join(nbr, "doc_id", "left").select(
+            "doc_id",
+            F.least("label", F.coalesce("nbr_min", F.col("label"))).alias(
+                "label"
             ),
-            "dst",
+            (F.col("nbr_min") < F.col("label")).alias("lowered"),
         )
-        .groupBy(F.col("src").alias("doc_id"))
-        .agg(F.min("nbr_label").alias("nbr_min"))
-    )
-    changed = (
-        labels.join(nbr, "doc_id")
-        .where(F.col("nbr_min") < F.col("label"))
-        .count()
-    )
-    if changed:
-        raise RuntimeError(
-            f"dedup_components: not converged after {CC_MAX_ITERS} iters "
-            f"({changed} labels still shrinking) — raise CC_MAX_ITERS"
-        )
-    return labels.select(
-        "doc_id",
-        F.col("label").alias("component"),
+
+    # CC_MAX_ITERS rounds plus the fixpoint check: the same graphs are
+    # accepted as by running all rounds and then one more to verify
+    for _ in range(CC_MAX_ITERS + 1):
+        labels = cache.persist(step(labels))
+        changed = labels.where("lowered").count()
+        if not changed:
+            return labels.select("doc_id", F.col("label").alias("component"))
+    raise RuntimeError(
+        f"dedup_components: not converged after {CC_MAX_ITERS} iters "
+        f"({changed} labels still shrinking) — raise CC_MAX_ITERS"
     )
 
 

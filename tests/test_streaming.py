@@ -37,28 +37,6 @@ def test_stream_matches_batch(spark, dirs):
     assert spark.read.parquet(dirs["out"]).count() == len(s)
 
 
-def test_windowed_agg_stream_matches_batch(spark, dirs):
-    import shutil as sh
-
-    from pdfplumber_golang_spark.streaming.windowed import (
-        stream_windowed_event_counts,
-        windowed_event_counts,
-    )
-
-    os.makedirs(dirs["in"], exist_ok=True)
-    sh.copy(f"{SF_DIR}/events.parquet", os.path.join(dirs["in"], "part-0.parquet"))
-    streamed = stream_windowed_event_counts(
-        spark, dirs["in"], dirs["out"], dirs["ckpt"]
-    ).toPandas()
-    batch = windowed_event_counts(spark, SF_DIR).toPandas()
-    key = ["window_start", "event_type"]
-    s = streamed.sort_values(key).reset_index(drop=True)
-    b = batch.sort_values(key).reset_index(drop=True)
-    assert len(s) == len(b)
-    for col in ("window_start", "event_type", "n_events", "sum_value"):
-        assert s[col].astype(str).tolist() == b[col].astype(str).tolist(), col
-
-
 def test_stateful_sessionize_stream_matches_batch(spark, dirs):
     """applyInPandasWithState session-gap sessionize == the batch
     sessionize for every session the watermark closed (sessions still
@@ -120,42 +98,6 @@ def test_stateful_sessionize_stream_matches_batch(spark, dirs):
     # and everything the watermark closed was emitted
     assert closed <= got, (len(closed), len(got))
     assert len(got) > 10  # sanity: the stream actually emitted sessions
-
-
-def test_stream_dedup_matches_batch_first_occurrence(spark, tmp_path):
-    """dropDuplicatesWithinWatermark keyed on content hash emits exactly
-    the batch first-occurrence set when all duplicates arrive inside the
-    watermark horizon (streaming/dedup.py)."""
-    from pyspark.sql import functions as F
-
-    from pdfplumber_golang_spark.sources.pagesgen import load_or_build_pages
-    from pdfplumber_golang_spark.streaming import dedup as SD
-
-    in_dir = str(tmp_path / "in")
-    # duplicate every 3rd doc under a new url, 2 minutes later (inside
-    # the 10-minute watermark horizon)
-    pages = load_or_build_pages(spark, "/root/testdata/sf0.001")
-    dups = (
-        pages.where(F.col("doc_id") % 3 == 0)
-        .withColumn("url", F.concat(F.col("url"), F.lit("#dup")))
-        .withColumn(
-            "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 2 MINUTES")
-        )
-    )
-    pages.unionByName(dups).repartition(8).write.parquet(in_dir)
-    got = SD.stream_dedup(
-        spark, in_dir, str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
-    want = SD.batch_dedup_first(spark, in_dir)
-    # one row per distinct content hash
-    n_hashes = got.select("h").distinct().count()
-    assert got.count() == n_hashes == want.count()
-    # streaming keeps one OF EACH duplicate group; with per-file ordering
-    # not guaranteed, assert set equality on hashes and that no emitted
-    # url appears twice
-    gh = {r.h for r in got.select("h").collect()}
-    wh = {r.h for r in want.select("h").collect()}
-    assert gh == wh
 
 
 def test_stream_interval_join_matches_batch(spark, tmp_path):

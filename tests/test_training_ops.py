@@ -391,6 +391,38 @@ def test_dedup_components_cluster_duplicates(spark):
     assert out.component.nunique() > n * 0.8
 
 
+def test_dedup_components_job_count_independent_of_max_iters(
+    spark, monkeypatch
+):
+    """The min-label loop stops at its fixpoint, so the Spark job count
+    follows the cluster diameter, not the CC_MAX_ITERS bound."""
+    from pdfplumber_golang_spark.plans import cache
+
+    sc = spark.sparkContext
+
+    def jobs_for(max_iters: int, tag: str) -> int:
+        monkeypatch.setattr(dedup, "CC_MAX_ITERS", max_iters)
+        cache.release()  # no call reads relations an earlier one persisted
+        sc.setJobGroup(tag, f"dedup_components max_iters={max_iters}")
+        try:
+            dedup.dedup_components(spark, SF_DIR).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    a = jobs_for(3, "cc-jc-3")
+    b = jobs_for(5, "cc-jc-5")
+    assert a == b, (a, b)
+
+
+def test_dedup_components_fails_loudly_when_not_converged(spark, monkeypatch):
+    """With no rounds allowed the check step still lowers labels, so the
+    call raises instead of returning half-merged clusters."""
+    monkeypatch.setattr(dedup, "CC_MAX_ITERS", 0)
+    with pytest.raises(RuntimeError, match="CC_MAX_ITERS"):
+        dedup.dedup_components(spark, SF_DIR)
+
+
 def test_media_resize_and_frame_sample_kernels():
     """Pure-kernel checks for the r4 multimodal ops: nearest-neighbor
     resize matches the closed form the oracle states, and the video
